@@ -278,7 +278,7 @@ def clear_session_state(spark) -> None:
     repetitions and entries.
 
     The heavy pipeline queries `localCheckpoint()` 2-3 frames per run
-    (registry_pipelines.py:170/:218/:238/:832); each call pins RDD
+    (registry/pipelines.py); each call pins RDD
     blocks in the block manager that are freed only when the
     ContextCleaner notices the py4j reference died — ASYNCHRONOUS
     cleanup that lags badly on a loaded host.  Across 87 entries × 3
@@ -303,6 +303,17 @@ def clear_session_state(spark) -> None:
         spark.sparkContext._jvm.System.gc()
     except Exception:  # noqa: BLE001
         pass
+
+
+def compact(v):
+    """One per-query median for the printed line: 1 decimal, integral
+    values as ints ("11" not "11.0"), "ERR" for a failed query (whose
+    per_query value is an error dict).  Ints are timings too — the
+    fold valve below treats them as such."""
+    if not isinstance(v, (int, float)):
+        return "ERR"
+    r = round(v, 1)
+    return int(r) if r == int(r) else r
 
 
 def main() -> None:
@@ -415,12 +426,6 @@ def main() -> None:
     # (≥10 s) map is ~1967: ZERO folds in any observed or realistic
     # shape.  The valve stays as the last resort for a host meltdown
     # or a mass-failure ERR map.
-    def compact(v):
-        if not isinstance(v, float):
-            return "ERR"
-        r = round(v, 1)
-        return int(r) if r == int(r) else r
-
     out = {
         "metric": "headline_queries_total",
         "value": round(total, 1),

@@ -57,4 +57,8 @@ ENGINE_CONF = {
     # let Python DataSources (sources/chipmunk.py) receive pushed
     # filters — off by default in Spark 4.1
     "spark.sql.python.filterPushdown.enabled": "true",
+    # TIMESTAMP(NANOS) parquet (older events fixtures) reads as long
+    # instead of failing; the registry's events loader truncates it to
+    # micros.  timestamp[us] files are unaffected.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }

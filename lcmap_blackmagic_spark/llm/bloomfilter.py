@@ -1,6 +1,6 @@
 """Broadcast Bloom membership filtering for corpus curation — the
 at-scale decontamination/blocklist shape shared by the batch query
-(registry_ext16.q_llm_bloom_decontam) and the streaming ingest twin
+(registry.dedup.q_llm_bloom_decontam) and the streaming ingest twin
 (streaming.jobs.bloom_decontam_stream):
 
 - the reference set's grams fold into an m-bit bitset via bit_or

@@ -525,7 +525,7 @@ def line_segments(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", w: int = LINE_W) -> DataFrame:
     """(id, n_segs, i, seg): consecutive ``w``-token segments of each
     document — the segmentation under the C4-style line-level dedup
-    (registry_ext23.q_llm_line_dedup and the streaming line store
+    (registry.dedup.q_llm_line_dedup and the streaming line store
     share this one definition; on a corpus with real newlines the
     split expression swaps for ``split(text, '\\n')`` and nothing
     else changes).  One projection + one Generate — no shuffle."""
@@ -782,7 +782,7 @@ def prefix_jaccard_pairs_staged(df: DataFrame, staging_dir: str,
     return _prefix_pairs_from_ranked(staged, id_col, t_num, t_den)
 
 
-# ---- robust winnowing (MOSS) — shared by registry_ext18 and the
+# ---- robust winnowing (MOSS) — shared by registry.dedup and the
 # ---- streaming ingest twin (streaming/jobs.winnow_dedup_stream)
 WIN_K = 4        # word k-gram size
 WIN_W = 4        # winnow window (guarantee: runs of >= w+k-1 words)
@@ -794,7 +794,7 @@ def winnow_fingerprints(df, id_col: str = "doc_id",
                         text_col: str = "text"):
     """(id, fp): each document's DISTINCT robust-winnowing
     fingerprints — md5 over the positional word WIN_K-gram sequence,
-    minimum per sliding WIN_W-window (see registry_ext18.q_llm_winnow_pairs for the
+    minimum per sliding WIN_W-window (see registry.dedup.q_llm_winnow_pairs for the
     guarantee).  One narrow projection + explode, no shuffle; shared
     by the batch pair query and the streaming ingest-dedup twin."""
     from .text import tokens
@@ -819,7 +819,7 @@ def winnow_fingerprints(df, id_col: str = "doc_id",
 
 def winnow_pairs(df, id_col: str = "doc_id", text_col: str = "text"):
     """Near-duplicate pairs from winnowing fingerprints — the batch
-    pair query's body (registry_ext18.q_llm_winnow_pairs documents
+    pair query's body (registry.dedup.q_llm_winnow_pairs documents
     the selection rule and the scale argument), split out so the
     skewed-fp guard is testable on arbitrary fixtures.
 

@@ -1,12 +1,12 @@
 """SemDeDup building blocks (Abbas et al. 2023), shared by the batch
-funnel query (registry_ext20.q_llm_semdedup) and the streaming ingest
+funnel query (registry.dedup.q_llm_semdedup) and the streaming ingest
 twin (streaming/jobs.semdedup_stream): integer-quantized embeddings,
 bit-exact integer-Lloyd cells (ml/intlloyd), and the within-cell
 integer cosine-threshold decision.
 
 All arithmetic is engine-replayable: coordinates quantized by
 floor(x·2^10) (exact on IEEE doubles), squared norms / dots exact in
-int64 (requires |component| ≤ 1 — see registry_ext20's derivation),
+int64 (requires |component| ≤ 1 — see registry.dedup's derivation),
 and the threshold compare widened to DECIMAL(38,0) because
 dot²·10⁴ ≈ 4.5e19 exceeds int64.
 """

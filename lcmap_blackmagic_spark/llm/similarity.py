@@ -361,7 +361,7 @@ def ann_store_topk(inc, store, cents, k: int = 3, probe: int = 2):
     (vec_id, qa, cell, n2); ``store`` likewise; ``cents`` the frozen
     centroid constant.  Exact-integer comparator: sign(dot)·dot² /
     (q2·n2) — one IEEE double division over int64s < 2^53, the
-    registry's cross-engine ranking contract (registry_ext19
+    registry's cross-engine ranking contract (registry.analytics
     docstring carries the magnitude-budget derivation).  Per query
     the candidate fan-out is the probed cells' store population;
     the centroid table is a collected model constant."""

@@ -259,7 +259,7 @@ def bpe_encode(df: DataFrame, merges: DataFrame, id_col: str = "doc_id",
                  F.count(F.lit(1)).alias("n_words")))
 
 
-# ---- DSIR importance scoring — shared by registry_ext18 (batch
+# ---- DSIR importance scoring — shared by registry.text (batch
 # ---- query) and the streaming scorer (streaming/jobs.dsir_score_stream)
 DSIR_B = 4096       # hashed feature buckets
 DSIR_SCALE = 10_000
@@ -294,7 +294,7 @@ def dsir_weights(target_docs: DataFrame,
     never silently drop a token whose bucket no frozen corpus
     happened to populate (an inner join against a sparse table did
     exactly that; caught in review).  See
-    registry_ext18.q_llm_dsir_score for the estimator argument and
+    registry.text.q_llm_dsir_score for the estimator argument and
     the int64 headroom bound."""
     t = dsir_features(target_docs)
     r = dsir_features(raw_docs)

@@ -1,6 +1,6 @@
 """K-fold cross-validation over the distributed trainer — the model
 selection loop a training pipeline runs on top of the k-fold split
-(registry_ext7.q_kfold_split is the split's oracle-checked twin).
+(registry.analytics.q_kfold_split is the split's oracle-checked twin).
 
 Reference parity: the reference fits once on a single random split
 (blackmagic/blueprints/tile.py:287-331); CV generalizes that with the
@@ -18,9 +18,8 @@ from .train import evaluate, train_model
 
 def fold_of(id_col: str, k: int):
     """md5-hash fold in [0, k) — the repo-wide deterministic hash
-    (registry_ext6._md48, same contract as q_kfold_split)."""
-    from .. import registry  # noqa: F401 — complete the import graph
-    from ..registry_ext6 import _md48
+    (registry.analytics._md48, same contract as q_kfold_split)."""
+    from ..registry.analytics import _md48
     return _md48(F.concat(F.lit("f:"), F.col(id_col))) % k
 
 

@@ -1,6 +1,6 @@
 """Bit-exact integer Lloyd iterations, shared by the exact-replay
-IVF (registry_ext19.q_llm_ann_ivf_exact) and SemDeDup
-(registry_ext20.q_llm_semdedup).
+IVF (registry.ann.q_llm_ann_ivf_exact) and SemDeDup
+(registry.dedup.q_llm_semdedup).
 
 The contract both engines replay identically (fuzz-pinned by
 tests/test_primitive_fuzz.py's div rules):

@@ -1,7 +1,7 @@
 """Full k-means (Lloyd) fit, distributed and DETERMINISTIC — the
 iteration harness over the E/M steps the registry exposes as
-oracle-checked single-step queries (registry_ext7.q_kmeans_assign,
-registry_ext8.q_kmeans_update).
+oracle-checked single-step queries (registry.ann.q_kmeans_assign,
+registry.ann.q_kmeans_update).
 
 Reproducibility is engineered, not hoped for:
 

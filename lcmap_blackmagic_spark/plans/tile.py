@@ -35,7 +35,7 @@ def tile_pipeline(segments: DataFrame, aux: DataFrame, date: str,
     # localCheckpoint: FOUR downstream consumers (stats, the sample's
     # per-class count collect, the split, the fit's matrix collect)
     # each re-ran the segments⨝aux assembly without it — the same
-    # barrier the bench-scale twin (registry_pipelines.q_lcmap_tile_
+    # barrier the bench-scale twin (registry.pipelines.q_lcmap_tile_
     # train) applies; the matrix is labeled-pixel-sized.  Lazy (r15):
     # the first consuming action materializes it in its own job, the
     # rest read blocks — one fewer blocking job, same reuse.

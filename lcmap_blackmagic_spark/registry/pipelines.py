@@ -1,4 +1,10 @@
-"""Pipeline registry entries: compositions whose core is a pandas-UDF
+"""Pipeline registry entries: the lcmap segment / tile / prediction
+compositions, the multimodal decode operators and the curation
+pipelines.
+
+The notes below moved here with the queries they describe.
+
+Pipeline registry entries: compositions whose core is a pandas-UDF
 or ML boundary (UD1 detect, UD2 train, UD3 predict, multimodal decode,
 ANN). Most are rows-only — no SQL oracle exists (seeded Spark-side
 fixtures / approximate sketches), so the driver records the weaker
@@ -15,7 +21,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .registry import _t
+from ..llm.semdedup import (SEM_CELLS, SEM_DIM, SEM_ITERS, SEM_TAU2_BP,
+                            quantize, sem_cond)
+from .base import _staging, _t, register
+from .dedup import _sql_sem_parts
+from .text import _mix_plan, _sql_mix
 
 
 def q_lcmap_segment_detect(spark, sf_dir):
@@ -25,8 +35,8 @@ def q_lcmap_segment_detect(spark, sf_dir):
     detector is closed-form integer-sum OLS, so DuckDB regenerates
     the identical raster in SQL and reproduces the fitted slope /
     intercept / RMSE bit-for-bit (_sql_segment_detect)."""
-    from .plans.segment import segment_pipeline
-    from .sources.fixtures import synth_ard_hash
+    from ..plans.segment import segment_pipeline
+    from ..sources.fixtures import synth_ard_hash
     ard = synth_ard_hash(spark, side=10)
     return segment_pipeline(ard, side=10).select(
         "cx", "cy", "px", "py", "sday", "eday", "curqa",
@@ -102,9 +112,9 @@ def q_lcmap_prediction(spark, sf_dir):
     (_sql_predict_chip(side=8)); the tile_pipeline fit — including
     its seeded sample/split, which only shape the MODEL, never the
     compared columns — still runs as the workload."""
-    from .plans.prediction import prediction_pipeline
-    from .plans.tile import tile_pipeline
-    from .sources.fixtures import synth_aux_hash, synth_segments_hash
+    from ..plans.prediction import prediction_pipeline
+    from ..plans.tile import tile_pipeline
+    from ..sources.fixtures import synth_aux_hash, synth_segments_hash
     segs = synth_segments_hash(spark, side=8)
     aux = synth_aux_hash(spark, side=8)
     model, _ = tile_pipeline(segs, aux, "2001-07-01", target_samples=200,
@@ -125,12 +135,40 @@ def q_lcmap_detect_chip(spark, sf_dir):
     published number for the reference's detect path; BASELINE.md's
     only anchor (~970 s/chip, prediction.py:203-207) is the companion
     prediction path benched by ``lcmap_predict_chip``."""
-    from .plans.segment import segment_pipeline
-    from .sources.fixtures import synth_ard_hash
+    from ..plans.segment import segment_pipeline
+    from ..sources.fixtures import synth_ard_hash
     ard = synth_ard_hash(spark, side=100)
     return segment_pipeline(ard, side=100).select(
         "cx", "cy", "px", "py", "sday", "eday", "curqa",
         F.col("recoef")[0].alias("reslope"), "reint", "rermse")
+
+
+def _train_chip(segs, aux):
+    """The training prelude both bench-scale chip queries share:
+    assembly → md5-ordered stratified sample → hash holdout split →
+    fit.  Returns ``(data, train, test, model)``."""
+    from ..ml.train import train_model
+    from ..operators.sampling import (stratified_sample,
+                                      train_test_split_hash)
+    from ..plans.training import training_data
+    # localCheckpoint: FOUR downstream consumers share the assembled
+    # matrix (stats, the sample, the fit's collect, the split counts) —
+    # without it Catalyst re-runs the segments⨝aux assembly per
+    # consumer.  ~20k rows × 69 features: sample-sized, not tile-sized.
+    # Lazy (r15): the fit's matrix collect is the first action and
+    # materializes it in the same job; the returned stats/split
+    # aggregates then read blocks under the caller's action.
+    ordc = F.conv(F.substring(F.md5(F.concat_ws(
+        ":", F.lit("ord"), F.col("px").cast("string"),
+        F.col("py").cast("string"))), 1, 12), 16, 10).cast("bigint")
+    data = (training_data(segs, aux, "2001-07-01", keep_keys=True)
+            .withColumn("__ord", ordc).localCheckpoint(eager=False))
+    sample = stratified_sample(data, "label", 20_000, 50, 4_000,
+                               order_col="__ord")
+    train, test = train_test_split_hash(sample, ["px", "py"], 0.2)
+    model = train_model(train.select("label", "features"),
+                        test.select("label", "features"))  # UD2: the fit
+    return data, train, test, model
 
 
 def q_lcmap_tile_train(spark, sf_dir):
@@ -148,35 +186,15 @@ def q_lcmap_tile_train(spark, sf_dir):
     order_col determinism contract) and the holdout coin is
     train_test_split_hash, so every count in the output is a closed
     -form function DuckDB reproduces (_sql_tile_train)."""
-    from .ml.train import train_model
-    from .operators.sampling import (stratified_sample,
-                                     train_test_split_hash)
-    from .operators.stats import label_statistics
-    from .plans.training import training_data
-    from .sources.fixtures import synth_aux_hash, synth_segments_hash
+    from ..operators.stats import label_statistics
+    from ..sources.fixtures import synth_aux_hash, synth_segments_hash
     segs = synth_segments_hash(spark, side=100)
     aux = synth_aux_hash(spark, side=100)
     # tile_pipeline's stages, shared instead of recomputed: assembly →
     # stats → sample → split → fit (plans/tile.py:tile_pipeline
     # verbatim; inlined so the summary below reuses the same frames)
-    # localCheckpoint: FOUR downstream consumers share the assembled
-    # matrix (stats, the sample, the fit's collect, the split counts) —
-    # without it Catalyst re-runs the segments⨝aux assembly per
-    # consumer.  ~20k rows × 69 features: sample-sized, not tile-sized.
-    # Lazy (r15): the fit's matrix collect is the first action and
-    # materializes it in the same job; the returned stats/split
-    # aggregates then read blocks under the caller's action.
-    ordc = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit("ord"), F.col("px").cast("string"),
-        F.col("py").cast("string"))), 1, 12), 16, 10).cast("bigint")
-    data = (training_data(segs, aux, "2001-07-01", keep_keys=True)
-            .withColumn("__ord", ordc).localCheckpoint(eager=False))
+    data, train, test, _ = _train_chip(segs, aux)
     stats = label_statistics(data, "label")
-    sample = stratified_sample(data, "label", 20_000, 50, 4_000,
-                               order_col="__ord")
-    train, test = train_test_split_hash(sample, ["px", "py"], 0.2)
-    train_model(train.select("label", "features"),
-                test.select("label", "features"))  # UD2: the fit
     splits = (train.agg(F.lit("train").alias("split"),
                         F.count(F.lit(1)).alias("n"))
               .unionByName(test.agg(F.lit("test").alias("split"),
@@ -204,12 +222,8 @@ def q_lcmap_predict_chip(spark, sf_dir):
     closed-form in DuckDB (_sql_predict_chip).  The fit and the
     mapInPandas inference still RUN — their probabilities are the
     ML boundary the oracle deliberately does not hash."""
-    from .ml.train import train_model
-    from .operators.sampling import (stratified_sample,
-                                     train_test_split_hash)
-    from .plans.prediction import prediction_pipeline
-    from .plans.training import training_data
-    from .sources.fixtures import synth_aux_hash, synth_segments_hash
+    from ..plans.prediction import prediction_pipeline
+    from ..sources.fixtures import synth_aux_hash, synth_segments_hash
     # localCheckpoint the fixture frames: BOTH the training assembly
     # and prediction_inputs below consume segs+aux, and each
     # checkpoint materialization re-ran the md5 fixture generation.
@@ -225,16 +239,7 @@ def q_lcmap_predict_chip(spark, sf_dir):
     aux = synth_aux_hash(spark, side=100).localCheckpoint(eager=False)
     # tile_pipeline's fit stages with the training matrix checkpointed
     # once (sample + the fit's collect re-ran the assembly)
-    ordc = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit("ord"), F.col("px").cast("string"),
-        F.col("py").cast("string"))), 1, 12), 16, 10).cast("bigint")
-    data = (training_data(segs, aux, "2001-07-01", keep_keys=True)
-            .withColumn("__ord", ordc).localCheckpoint(eager=False))
-    sample = stratified_sample(data, "label", 20_000, 50, 4_000,
-                               order_col="__ord")
-    train, test = train_test_split_hash(sample, ["px", "py"], 0.2)
-    model = train_model(train.select("label", "features"),
-                        test.select("label", "features"))
+    *_, model = _train_chip(segs, aux)
     # prediction_pipeline's stages, inlined (the tile_train precedent)
     # to cut the final job's contention surface: the defaults/data
     # union otherwise re-runs the fixture assembly + feature build in
@@ -246,9 +251,9 @@ def q_lcmap_predict_chip(spark, sf_dir):
     # under driver-suite load (r12's 5.9→14 s swing; SCALE.md r13).
     # Chip-scale only: the real tile path (prediction_pipeline) keeps
     # full parallelism — there the matrix is tile-sized, not 20 MB.
-    from .ml.predict import predict_probabilities
-    from .operators.unions import default_predictions, group_data
-    from .plans.prediction import prediction_inputs
+    from ..ml.predict import predict_probabilities
+    from ..operators.unions import default_predictions, group_data
+    from ..plans.prediction import prediction_inputs
     inputs = prediction_inputs(segs, aux, 7, 1) \
         .localCheckpoint(eager=False)
     defaults, data = group_data(inputs)
@@ -304,7 +309,7 @@ def _sql_tile_train(side: int = 100, cx: int = -2061585,
     spanning segment per pixel), label statistics, the order_col
     stratified sample (row_number ≤ ceil/clip cap), and the md5
     holdout coin (operators/sampling.train_test_split_hash)."""
-    from .operators.sampling import HASH_MOD
+    from ..operators.sampling import HASH_MOD
     thr = int(test_size * HASH_MOD)
     ordk = _h12sql("'ord:' || px || ':' || py")
     coink = _h12sql("'split:' || px || ':' || py")
@@ -349,7 +354,7 @@ def _sql_predict_chip(side: int = 100, cx: int = -2061585,
     y0..y1-1; a default segment yields one sentinel row), with the
     prob-vector arity — NUM_CLASSES for modeled rows, 0 for defaults
     (operators/unions.default_predictions)."""
-    from .schemas import NUM_CLASSES
+    from ..schemas import NUM_CLASSES
     return f"""
 WITH {_sql_hash_fixtures(side)},
 rows_real AS (
@@ -372,279 +377,11 @@ FROM allrows
 """
 
 
-def q_llm_minhash_pipeline(spark, sf_dir):
-    """Pipeline form of ``llm_minhash_pairs``: the md5-heavy per-doc
-    (band-MINs + hashed-shingle-set) aggregate is materialized to a
-    staging parquet ONCE, and both the LSH candidate join and the
-    exact-Jaccard verify derive from the staged scan — the pure-query
-    form executes that pass twice (Catalyst specializes the shared
-    aggregate per consumer; llm/dedup.py NOTE). Identical output and
-    oracle to ``llm_minhash_pairs``. The staging dir is a fixed temp
-    path overwritten per run — in production it would be the
-    signature store a dedup job checkpoints to anyway."""
-    from .llm.dedup import minhash_pairs_staged
-    from .registry import _staging
-    d = _t(spark, sf_dir, "documents")
-    return minhash_pairs_staged(d, _staging(sf_dir, "minhash_agg"),
-                                threshold=0.2)
-
-
-def q_llm_ann_topk(spark, sf_dir):
-    """LSH-bucketed approximate nearest neighbors (the scale path of
-    llm_cosine_topk; recall < 1 vs TRUE neighbors by design, but the
-    candidate set and ranking are a deterministic function of the
-    data, so the query has a full oracle — the DuckDB side replays
-    the same ±1 sign planes, bucket join, and rounded-cosine
-    ranking)."""
-    from .llm.similarity import lsh_ann_topk
-    e = _t(spark, sf_dir, "embeddings")
-    return lsh_ann_topk(e, F.col("vec_id") % 50 == 0, k=5)
-
-
-def _sql_ann_topk(n_tables: int = 4, n_planes: int = 8,
-                  k: int = 5) -> str:
-    """Generated oracle for ``q_llm_ann_topk`` — same plane weights,
-    same bucket join, same round-then-rank order as the Spark form
-    (mirrors registry_ext2._sql_embed_neardup)."""
-    from .registry_ext2 import _DOT, _sql_bucket
-    keyed = "\n  UNION ALL\n  ".join(
-        f"SELECT vec_id, v, {t} AS tbl, {_sql_bucket(t, n_planes)} AS bucket FROM e"
-        for t in range(n_tables))
-    cos = (f"{_DOT.format(a='x.v', b='y.v')} / "
-           f"(sqrt({_DOT.format(a='x.v', b='x.v')}) * "
-           f"sqrt({_DOT.format(a='y.v', b='y.v')}))")
-    return f"""
-WITH e AS (SELECT vec_id,
-                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-           FROM embeddings),
-k AS (
-  {keyed}
-),
-cand AS (
-  SELECT DISTINCT q.vec_id AS qid, c.vec_id AS nid
-  FROM k q JOIN k c ON q.tbl = c.tbl AND q.bucket = c.bucket
-  WHERE q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id),
-scored AS (
-  SELECT cand.qid, cand.nid, ROUND({cos}, 6) AS cosine
-  FROM cand JOIN e x ON x.vec_id = cand.qid
-            JOIN e y ON y.vec_id = cand.nid)
-SELECT qid, nid, cosine FROM (
-  SELECT qid, nid, cosine,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cosine DESC, nid) AS rn
-  FROM scored) t
-WHERE rn <= {k}
-"""
-
-
-def q_llm_ann_ivf(spark, sf_dir):
-    """IVF approximate nearest neighbors (k-means cells, n_probe
-    probing) — the partition-pruned scale path; recall < 1 by design."""
-    from .llm.similarity import ivf_ann_topk
-    e = _t(spark, sf_dir, "embeddings")
-    return ivf_ann_topk(e, F.col("vec_id") % 50 == 0, k=5)
-
-
-# approx_sketches tolerance contract (VERDICT r12 item 7): the
-# sketches are DETERMINISTIC functions of the data (hash-based HLL,
-# deterministic GK), so their error on a given fixture is fixed — the
-# bound below is a real invariant, not a probabilistic hope.  Measured
-# worst cases across sf0.001/0.01/0.1: distinct-count relative error
-# 1.65×rsd (sf0.1 flag R), median rank offset exactly 1.0 theoretical
-# unit (sf0.01, the n/accuracy guarantee boundary) — the multiples
-# give ≥ 1.8× headroom while still failing on a broken sketch.
-SKETCH_CD_TOL_BP = 600    # |approx−exact| ≤ 600 bp of exact (3 × rsd)
-SKETCH_PCT_ACC = 10_000   # percentile_approx accuracy (rank err n/acc)
-SKETCH_PCT_TOL = 2        # rank tolerance in n/accuracy units
-
-
-def q_approx_sketches(spark, sf_dir):
-    """Sketch aggregates — the 100 TB substitute for exact distinct
-    counts and exact percentiles (one pass, bounded memory, mergeable
-    across partitions) — re-registered as an ORACLE-CHECKED
-    approximation contract (formerly rows-only): the query emits the
-    exact aggregates (hash-pinned by DuckDB) alongside per-group
-    booleans asserting the sketch outputs sit inside their documented
-    error bounds, computed IN the plan with integer arithmetic:
-
-    - ``orders_ok``: |approx_count_distinct − exact|·10⁴ ≤ exact·600
-      (HLL rsd 0.02, 3× tolerance),
-    - ``median_ok``: the exact rank interval of the GK-returned
-      median value (cnt< , cnt≤ against the cents column) stays
-      within ±2 n/accuracy units of n/2 — percentile_approx's own
-      rank guarantee with 2× slack.
-
-    The oracle computes the exact side and expects TRUE: a sketch
-    that drifts outside its contract hash-mismatches.  Scale shape:
-    the sketches and exact counts are one grouped pass; the rank
-    check joins the ≤ |flags| medians back for a second grouped pass
-    — verification-harness cost, not the production sketch path
-    (which is the first aggregate alone)."""
-    l = _t(spark, sf_dir, "lineitem")
-    cents = (F.col("l_extendedprice").cast("decimal(18,2)") * 100) \
-        .cast("bigint")
-    base = l.select("l_returnflag", "l_orderkey", cents.alias("cents"))
-    ap = base.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_orderkey", rsd=0.02).alias("a_cd"),
-        F.percentile_approx("cents", F.lit(0.5),
-                            F.lit(SKETCH_PCT_ACC)).alias("a_med"),
-        F.countDistinct("l_orderkey").alias("exact_orders"),
-        F.count(F.lit(1)).alias("n_rows"))
-    ranks = (base.join(ap.select("l_returnflag", "a_med"),
-                       "l_returnflag")
-             .groupBy("l_returnflag")
-             .agg(F.sum(F.when(F.col("cents") <= F.col("a_med"), 1)
-                        .otherwise(0)).alias("cle"),
-                  F.sum(F.when(F.col("cents") < F.col("a_med"), 1)
-                        .otherwise(0)).alias("clt")))
-    half = SKETCH_PCT_ACC // 2
-    return (ap.join(ranks, "l_returnflag")
-            .select(
-                "l_returnflag", "n_rows", "exact_orders",
-                (F.abs(F.col("a_cd") - F.col("exact_orders")) * 10_000
-                 <= F.col("exact_orders") * SKETCH_CD_TOL_BP)
-                .alias("orders_ok"),
-                ((F.col("cle") * SKETCH_PCT_ACC
-                  >= F.col("n_rows") * (half - SKETCH_PCT_TOL))
-                 & (F.col("clt") * SKETCH_PCT_ACC
-                    <= F.col("n_rows") * (half + SKETCH_PCT_TOL)))
-                .alias("median_ok"))
-            .orderBy("l_returnflag"))
-
-
-SQL_APPROX_SKETCHES = """
-SELECT l_returnflag,
-       COUNT(*) AS n_rows,
-       COUNT(DISTINCT l_orderkey) AS exact_orders,
-       TRUE AS orders_ok,
-       TRUE AS median_ok
-FROM lineitem
-GROUP BY l_returnflag
-ORDER BY l_returnflag
-"""
-
-
-# ------------------------------------------- deterministic sketches -
-
-KMV_K = 256
-_H48 = 2 ** 48          # 12 hex digits of md5 as an integer
-KMV_SAMPLE_THRESH = 2 ** 45  # 1/8 hash-sample for the median sketch
-
-
-def q_kmv_sketch(spark, sf_dir):
-    """Oracle-checkable sketch twin of ``approx_sketches``: both
-    estimators are *deterministic functions of md5*, so Spark and
-    DuckDB produce bit-identical doubles —
-
-    - KMV distinct count: the K smallest distinct 48-bit hashes per
-      group; estimate (K-1)·2^48 / h_(K) (the classic k-minimum-values
-      estimator). Exact when a group has < K distinct keys.
-    - hash-sampled median: rank-based (no interpolation arithmetic)
-      median of a 1/8 deterministic hash sample.
-
-    The production form at 100 TB is ``approx_sketches`` (HLL/GK are
-    one-pass, mergeable, bounded-memory); this query pins the sketch
-    *pattern* against the oracle, and its estimates are themselves
-    tolerance-tested against exact values in tests/test_sketches.py.
-    Scale shapes (round 7): the K smallest hashes come from the
-    bucket-pyramid top-k (operators/sketches.k_smallest — only one
-    4096th of each group's hash space is ever sorted, vs the old
-    row_number window funneling every distinct hash of a 3-value
-    group through one task), and the sampled median is read off the
-    cum_below prefix pyramid instead of a per-flag rank window over
-    the whole 1/8 sample."""
-    from .operators.sketches import k_smallest
-    from .registry_ext10 import cum_below
-    l = _t(spark, sf_dir, "lineitem")
-    h = F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")),
-                           1, 12), 16, 10).cast("bigint")
-    # localCheckpoint: k_smallest consumes its input twice (bucket
-    # counts + the rank join) — without the barrier the md5 scan +
-    # distinct shuffle execute per consumer.  LAZY (r15, VERDICT
-    # item 4): both consumers sit inside the single final action, so
-    # blocks persist at first touch there; the r14 eager form paid a
-    # blocking materialization job that cost more than the saved
-    # re-scan at bench scale (driver 2.8 → 3.7 s) while the plan's
-    # scan-reduction (lineitem 7× → 2×) is retained unchanged.
-    dist = (l.select("l_returnflag", h.alias("h")).distinct()
-            .localCheckpoint(eager=False))
-    topk = k_smallest(dist, ["l_returnflag"], "h", KMV_K)
-    kmv = (topk.groupBy("l_returnflag")
-           .agg(F.max("h").alias("hk"), F.count(F.lit(1)).alias("k"))
-           .select("l_returnflag",
-                   F.when(F.col("k") < KMV_K, F.col("k").cast("double"))
-                   .otherwise(F.lit(float(KMV_K - 1)) * F.lit(float(_H48))
-                              / F.col("hk"))
-                   .alias("kmv_distinct")))
-    hs = F.conv(F.substring(F.md5(F.concat_ws(
-        "-", F.col("l_orderkey").cast("string"),
-        F.col("l_linenumber").cast("string"))), 1, 12), 16, 10) \
-        .cast("bigint")
-    # localCheckpoint: the sample feeds the per-flag count AND the
-    # cum_below pyramid (which derives three tables from it) — the
-    # md5 sample filter re-ran per consumer.  Lazy: see `dist`.
-    samp = (l.filter(hs < KMV_SAMPLE_THRESH).select(
-        "l_returnflag",
-        (F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("bigint").alias("cents"))
-        .localCheckpoint(eager=False))
-    # median VALUE at rank ceil(n/2) is tie-break-free: the smallest
-    # cents value whose cumulative count reaches the rank — read off
-    # the prefix pyramid (every window partition ≤1024 rows) instead
-    # of ranking the whole per-flag sample in one task
-    n_g = samp.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n"))
-    cum = cum_below(samp, "cents", by=("l_returnflag",))
-    med = (cum.join(F.broadcast(n_g), "l_returnflag")
-           .filter(F.col("cum_lt") + F.col("c")
-                   >= F.ceil(F.col("n") / 2))
-           .groupBy("l_returnflag")
-           .agg(F.min("v").alias("mc"))
-           .select("l_returnflag",
-                   (F.col("mc") / 100).cast("double")
-                   .alias("sampled_median")))
-    return kmv.join(med, "l_returnflag")
-
-
-SQL_KMV_SKETCH = f"""
-WITH d AS (
-  SELECT DISTINCT l_returnflag,
-         CAST('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 12)
-              AS BIGINT) AS h
-  FROM lineitem),
-r AS (SELECT l_returnflag, h,
-             ROW_NUMBER() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn
-      FROM d),
-kmv AS (SELECT l_returnflag, MAX(h) AS hk, COUNT(*) AS k
-        FROM r WHERE rn <= {KMV_K} GROUP BY l_returnflag),
-kv AS (SELECT l_returnflag,
-              CASE WHEN k < {KMV_K} THEN CAST(k AS DOUBLE)
-                   ELSE CAST({KMV_K - 1} AS DOUBLE) * CAST({_H48} AS DOUBLE)
-                        / hk END AS kmv_distinct
-       FROM kmv),
-s AS (SELECT l_returnflag, CAST(l_extendedprice AS DECIMAL(18,2)) AS price,
-             l_orderkey, l_linenumber
-      FROM lineitem
-      WHERE CAST('0x' || substr(md5(concat_ws('-',
-                  CAST(l_orderkey AS VARCHAR),
-                  CAST(l_linenumber AS VARCHAR))), 1, 12) AS BIGINT)
-            < {KMV_SAMPLE_THRESH}),
-m AS (SELECT l_returnflag, CAST(price AS DOUBLE) AS sampled_median
-      FROM (SELECT l_returnflag, price,
-                   ROW_NUMBER() OVER (PARTITION BY l_returnflag
-                       ORDER BY price, l_orderkey, l_linenumber) AS rn,
-                   COUNT(*) OVER (PARTITION BY l_returnflag) AS n
-            FROM s)
-      WHERE rn = CAST(CEIL(n / 2.0) AS BIGINT))
-SELECT kv.l_returnflag, kv.kmv_distinct, m.sampled_median
-FROM kv JOIN m ON kv.l_returnflag = m.l_returnflag
-"""
-
-
 def q_src_chipmunk(spark, sf_dir):
     """S1 as a Spark 4 Python DataSource: chip-grain partitions with
     (cx, cy) filter pushdown. Output: per-chip acquisition counts."""
-    from .session import ensure_worker_imports
-    from .sources.chipmunk import ChipmunkDataSource
+    from ..session import ensure_worker_imports
+    from ..sources.chipmunk import ChipmunkDataSource
     ensure_worker_imports(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(ChipmunkDataSource)
@@ -663,7 +400,7 @@ def _sql_src_chipmunk() -> str:
     RNG-synthesized and stay pinned by tests instead. This checks the
     partition/grid/pushdown plumbing delivers exactly one row per
     (chip, ubid, acquisition)."""
-    from .sources.fixtures import UBID_BANDS
+    from ..sources.fixtures import UBID_BANDS
     ubids = ", ".join(f"('{u}')" for u in sorted(UBID_BANDS))
     return f"""
 WITH ij AS (SELECT a.i AS i, b.j AS j
@@ -686,7 +423,7 @@ def q_mm_extract_features(spark, sf_dir):
     float32), so the whole Arrow decode/pool path hash-matches
     (_sql_mm_features).  Real codecs ride the same plumbing with
     decoder= (library_decoder)."""
-    from .llm.multimodal import attach_payloads, extract_features
+    from ..llm.multimodal import attach_payloads, extract_features
     docs = _t(spark, sf_dir, "documents")
     media = attach_payloads(docs.filter(F.col("doc_id") < 120))
     return extract_features(media, n_features=16)
@@ -697,7 +434,7 @@ def q_mm_resize(spark, sf_dir):
     FULLY ORACLE-CHECKED (round 11): on the 16×16 sha-raster every
     2×2 block mean is a four-byte dyadic mean of digest bytes —
     closed-form in SQL (_sql_mm_resize)."""
-    from .llm.multimodal import attach_payloads, resize_images
+    from ..llm.multimodal import attach_payloads, resize_images
     docs = _t(spark, sf_dir, "documents")
     media = attach_payloads(docs.filter(F.col("doc_id") < 120))
     return resize_images(media, out_h=8, out_w=8)
@@ -769,7 +506,7 @@ def q_mm_frame_sample(spark, sf_dir):
     sample-enumeration + per-frame feature path replays in SQL
     (_sql_mm_frame_sample).  Real MP4 payloads ride the metadata/
     real-decode branches instead, pinned by the golden codec tests."""
-    from .llm.multimodal import attach_payloads, frame_sample
+    from ..llm.multimodal import attach_payloads, frame_sample
     docs = _t(spark, sf_dir, "documents")
     media = attach_payloads(docs.filter(F.col("doc_id") < 120))
     return frame_sample(media)
@@ -805,11 +542,6 @@ FROM hx ORDER BY media_id, frame_idx
 """
 
 
-def _sql_minhash_pipeline() -> str:
-    from .registry_llm import SQL_MINHASH_PAIRS
-    return SQL_MINHASH_PAIRS
-
-
 CURATE_TOK_MIN = 30
 CURATE_TOK_MAX = 100
 
@@ -821,8 +553,7 @@ def _curation_stages(spark, sf_dir, q, staging_key):
     through the identical machinery)."""
     from pyspark.sql import Window
 
-    from .llm.dedup import dedup_components, minhash_pairs_staged, shingles
-    from .registry import _staging
+    from ..llm.dedup import dedup_components, minhash_pairs_staged, shingles
     pairs = minhash_pairs_staged(q, _staging(sf_dir, staging_key),
                                  threshold=0.2)
     comp = dedup_components(pairs, q.select("doc_id"))
@@ -893,7 +624,7 @@ def q_llm_curation(spark, sf_dir):
 
 
 def _sql_llm_curation() -> str:
-    from .registry_llm2 import sql_dedup_groups
+    from .dedup import sql_dedup_groups
     groups = sql_dedup_groups().replace("FROM documents", "FROM qdocs")
     gram5 = ("UNNEST(list_transform(generate_series(1, len(ws) - 4), "
              "i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' "
@@ -951,7 +682,7 @@ def q_llm_curation_lines(spark, sf_dir):
     column (document identity, not post-rewrite size).  Every stage
     stays integer/string-exact, so the whole five-stage funnel
     carries one composed DuckDB oracle."""
-    from .llm.dedup import line_dedup_rewrite
+    from ..llm.dedup import line_dedup_rewrite
 
     d = _t(spark, sf_dir, "documents")
     rew = line_dedup_rewrite(d)
@@ -989,8 +720,8 @@ def q_llm_curation_lines(spark, sf_dir):
 
 
 def _sql_llm_curation_lines() -> str:
-    from .llm.dedup import LINE_MAXOCC, LINE_W
-    from .registry_llm2 import sql_dedup_groups
+    from ..llm.dedup import LINE_MAXOCC, LINE_W
+    from .dedup import sql_dedup_groups
     groups = sql_dedup_groups().replace("FROM documents", "FROM qdocs")
     gram5 = ("UNNEST(list_transform(generate_series(1, len(ws) - 4), "
              "i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' "
@@ -1060,7 +791,505 @@ ORDER BY stage_id
 """
 
 
-QUERIES_PIPELINES: dict[str, dict] = {
+# ------------------------------------------- multimodal analysis ----
+
+
+def q_mm_phash_pairs(spark, sf_dir):
+    """Image near-duplicate pairs by perceptual hash: decode (fake
+    deterministic decoder — the real codecs swap in via decoder=) →
+    32×32 DCT pHash in one Arrow pass → byte-block pigeonhole
+    banding → exact hamming on candidates, all JVM-side.  FULL
+    oracle since round 12: the DCT is SCALED-INTEGER
+    (multimodal.PHASH_DCT_SCALE — basis rounded to 1/2^16, raster
+    quantized to 1/16 grey levels, median as the exact 32nd order
+    statistic), so DuckDB replays the hash bit-for-bit from the same
+    rounded basis embedded as literals, INCLUDING the banding
+    candidate step (radius 10 > the pigeonhole-complete 7, so the
+    oracle must replicate the shares-a-byte-block condition, not
+    compute all-pairs)."""
+    from ..llm.multimodal import attach_payloads, phash_images, phash_pairs
+    docs = _t(spark, sf_dir, "documents")
+    media = attach_payloads(docs)
+    # the banding self-join consumes the hash table twice; staging the
+    # (media_id, phash) rows runs the Python DCT pass ONCE (the
+    # minhash/prefix staging lesson — measured 4.1 s → ~2 s at sf0.1)
+    staging = _staging(sf_dir, "phash")
+    phash_images(media).write.mode("overwrite").parquet(staging)
+    hashes = spark.read.parquet(staging)
+    return (phash_pairs(hashes, max_hamming=10)
+            .orderBy("id_a", "id_b"))
+
+
+def q_mm_audio_features(spark, sf_dir):
+    """Clip-level audio descriptors (RMS / zero-crossing rate /
+    spectral centroid / rolloff) over opaque payloads — rows-only
+    (numpy rFFT: transcendental twiddles + pairwise float summation
+    no SQL engine replays); the sine-wave golden test pins the DSP
+    math against closed-form expectations, and since round 12 the
+    ORACLE-CHECKED twin ``mm_audio_descriptors_bp``
+    (registry_ext17) pins the same descriptor family bit-exactly via
+    a scaled-integer DFT."""
+    from ..llm.multimodal import attach_payloads, audio_features
+    docs = _t(spark, sf_dir, "documents")
+    media = attach_payloads(docs.filter(F.col("doc_id") < 200))
+    return audio_features(media)
+
+
+def _sql_mm_phash_pairs() -> str:
+    """DuckDB replay of the ENTIRE pHash pipeline: sha256 pseudo-
+    raster (fake_decoder: 16×16 of digest-byte values, raster cell
+    (y,x) = byte (16·(y%2)+x)), exact 2× upsample to 32×32, the
+    scaled-integer 2-D DCT with the SAME rounded basis phash64 uses
+    (embedded below as 1024 literals), the 8×8 block / 32nd-order-
+    statistic median / sign bits, then the byte-block pigeonhole
+    banding and exact hamming ≤ 10 — false negatives of the banding
+    included, because the oracle replays the banding, not all-pairs.
+    HUGEINT carries the unsigned hash; the signed two's-complement
+    BIGINT is what both engines emit."""
+    from ..llm.multimodal import _dctn_matrix_int
+    dlist = ",".join(str(int(x)) for x in _dctn_matrix_int(32).ravel())
+    return f"""
+WITH dm AS (
+  SELECT (k // 32) AS u, (k % 32) AS i, d[k + 1] AS c
+  FROM (SELECT [{dlist}] AS d), generate_series(0, 1023) t(k)),
+b AS (
+  SELECT doc_id AS media_id, sha256(text) AS hx
+  FROM documents WHERE doc_id % 3 <> 1),
+pix AS (
+  SELECT media_id, i.i AS i, j.j AS j,
+         CAST('0x' || substr(hx,
+              2 * ((16 * ((i.i // 2) % 2) + (j.j // 2)) % 32) + 1, 2)
+              AS BIGINT) * 16 AS v
+  FROM b, generate_series(0, 31) i(i), generate_series(0, 31) j(j)),
+t1 AS (
+  SELECT p.media_id, dm.u, p.j, SUM(dm.c * p.v) AS s
+  FROM pix p JOIN dm ON dm.i = p.i WHERE dm.u < 8
+  GROUP BY p.media_id, dm.u, p.j),
+t2 AS (
+  SELECT t1.media_id, t1.u, dm.u AS w, SUM(t1.s * dm.c) AS s
+  FROM t1 JOIN dm ON dm.i = t1.j WHERE dm.u < 8
+  GROUP BY t1.media_id, t1.u, dm.u),
+blk AS (SELECT media_id, u * 8 + w AS idx, s FROM t2),
+med AS (
+  SELECT media_id, s AS med FROM (
+    SELECT media_id, s,
+           ROW_NUMBER() OVER (PARTITION BY media_id ORDER BY s) AS rn
+    FROM blk WHERE idx > 0) WHERE rn = 32),
+h AS (
+  SELECT blk.media_id,
+         SUM(CASE WHEN blk.s > med.med
+             THEN CAST(1 AS HUGEINT) << (63 - blk.idx)
+             ELSE CAST(0 AS HUGEINT) END) AS ub
+  FROM blk JOIN med USING (media_id) GROUP BY blk.media_id),
+hh AS (
+  SELECT media_id, ub,
+         CAST(CASE WHEN ub >= CAST(1 AS HUGEINT) << 63
+              THEN ub - (CAST(1 AS HUGEINT) << 64)
+              ELSE ub END AS BIGINT) AS phash
+  FROM h),
+blocks AS (
+  SELECT media_id, phash, bb.b AS blk,
+         CAST((ub >> (8 * bb.b)) & 255 AS BIGINT) AS v
+  FROM hh, generate_series(0, 7) bb(b)),
+cand AS (
+  SELECT DISTINCT a.media_id AS id_a, b2.media_id AS id_b,
+         a.phash AS ha, b2.phash AS hb
+  FROM blocks a JOIN blocks b2 ON a.blk = b2.blk AND a.v = b2.v
+  WHERE a.media_id < b2.media_id)
+SELECT id_a, id_b, CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
+FROM cand WHERE bit_count(xor(ha, hb)) <= 10
+ORDER BY id_a, id_b
+"""
+
+
+# ------------------------- training-prep mixing pipeline -----------
+
+TP_HASH_MOD = 1 << 20
+
+
+def q_llm_trainprep(spark, sf_dir):
+    """COMPOSED training-prep pipeline: quality cut → temperature
+    mixture weights over the survivors (w ∝ n^0.5, the
+    source_mix_weights rule) → DETERMINISTIC per-source Bernoulli
+    sampling at each source's planned rate (keep doc iff
+    md48('mix:'||doc_id) mod 2^20 < (planned·2^20) div n — an exact
+    integer threshold, so the sample is reproducible across shards,
+    engines, and reruns).  Emits the per-source funnel: survivors,
+    fixed-point weight, planned docs, actually-sampled docs and
+    their token mass — the plan-vs-actual table a data-mixing job
+    reports.  Every stage is integer-exact end to end."""
+    from .analytics import _md48
+    d = _t(spark, sf_dir, "documents")
+    ntok = F.size(F.split(F.lower(F.trim("text")), " ")).cast("bigint")
+    q = d.withColumn("n_tok", ntok).filter(
+        F.col("n_tok").between(CURATE_TOK_MIN, CURATE_TOK_MAX))
+    per_src = (q.groupBy("source")
+               .agg(F.count(F.lit(1)).alias("n_docs")))
+    # planned·2^20 also clears int64 at large corpus sizes — same
+    # DECIMAL(38,0) rule as inside _mix_plan
+    plan = (_mix_plan(per_src)
+            .withColumn("keep_thresh",
+                        F.expr("(CAST(planned_docs AS DECIMAL(38,0))"
+                               f" * {TP_HASH_MOD}) div n_docs"))
+            .select("source", "n_docs", "w_fix", "planned_docs",
+                    "keep_thresh"))
+    h = _md48(F.concat(F.lit("mix:"), F.col("doc_id"))) % TP_HASH_MOD
+    sampled = (q.join(F.broadcast(plan), "source")
+               .filter(h < F.col("keep_thresh")))
+    samp_stats = (sampled.groupBy("source")
+                  .agg(F.count(F.lit(1)).alias("n_sampled"),
+                       F.sum("n_tok").alias("tok_sampled")))
+    return (plan.join(samp_stats, "source", "left")
+            .select("source", "n_docs", "w_fix", "planned_docs",
+                    F.coalesce("n_sampled", F.lit(0)).alias("n_sampled"),
+                    F.coalesce("tok_sampled", F.lit(0))
+                    .alias("tok_sampled"))
+            .orderBy("source"))
+
+
+_TPMAX = CURATE_TOK_MAX
+_TPMIN = CURATE_TOK_MIN
+
+SQL_LLM_TRAINPREP = f"""
+WITH q AS (
+  SELECT source, doc_id,
+         CAST(length(lower(trim(text)))
+              - length(replace(lower(trim(text)), ' ', '')) + 1
+              AS BIGINT) AS n_tok
+  FROM documents
+  WHERE CAST(length(lower(trim(text)))
+             - length(replace(lower(trim(text)), ' ', '')) + 1
+             AS BIGINT) BETWEEN {{tpmin}} AND {{tpmax}}),
+per_src AS (
+  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs
+  FROM q GROUP BY source),
+{_sql_mix("per_src")},
+plan AS (
+  SELECT source, n_docs, w_fix, planned_docs,
+         CAST((CAST(planned_docs AS HUGEINT) * {TP_HASH_MOD})
+              // n_docs AS BIGINT) AS keep_thresh
+  FROM mixplan),
+sampled AS (
+  SELECT q.source, CAST(COUNT(*) AS BIGINT) AS n_sampled,
+         CAST(SUM(q.n_tok) AS BIGINT) AS tok_sampled
+  FROM q JOIN plan ON q.source = plan.source
+  WHERE CAST('0x' || substr(md5('mix:' || CAST(q.doc_id AS VARCHAR)),
+                            1, 12) AS BIGINT) % {TP_HASH_MOD}
+        < plan.keep_thresh
+  GROUP BY q.source)
+SELECT p.source, p.n_docs, p.w_fix, p.planned_docs,
+       COALESCE(s.n_sampled, 0) AS n_sampled,
+       COALESCE(s.tok_sampled, 0) AS tok_sampled
+FROM plan p LEFT JOIN sampled s ON p.source = s.source
+ORDER BY p.source
+""".format(tpmin=_TPMIN, tpmax=_TPMAX)
+
+# --------------------------------------- audio descriptors (bp) -----
+
+AUDIO_DFT_SCALE = 1 << 14       # twiddle fixed point: |re| ≤ 32·128·2^14 = 2^26
+AUDIO_DFT_N = 32                # the sha-wave's true period (digest bytes)
+AUDIO_DFT_BINS = 16
+
+
+def _audio_twiddles():
+    """Scaled-integer DFT basis for the 32-sample wave, rounded ONCE
+    here and embedded as literals in BOTH engines' plans — the same
+    determinism move as phash64's DCT.  (The fake 256-sample wave is
+    the digest repeated 8×, so its 256-point spectrum is exactly the
+    32-point spectrum of the digest at every 8th bin — the 32-point
+    DFT loses nothing.)"""
+    import numpy as np
+    k = np.arange(AUDIO_DFT_BINS + 1).reshape(-1, 1)
+    i = np.arange(AUDIO_DFT_N).reshape(1, -1)
+    ang = 2 * np.pi * k * i / AUDIO_DFT_N
+    tc = np.rint(np.cos(ang) * AUDIO_DFT_SCALE).astype(np.int64)
+    ts = np.rint(-np.sin(ang) * AUDIO_DFT_SCALE).astype(np.int64)
+    return tc, ts
+
+
+def q_mm_audio_descriptors_bp(spark, sf_dir):
+    """Engine-portable INTEGER twin of ``mm_audio_features``
+    (llm/multimodal.audio_feature_vector — the float/FFT operator the
+    sine golden test pins): the same descriptor family — energy,
+    zero-crossing rate, spectral centroid, 85% rolloff — defined so
+    every value is an exact integer any engine reproduces:
+
+    - the wave is the 32 centered digest bytes (the fake 256-sample
+      wave repeats them 8×, see _audio_twiddles);
+    - the spectrum is a scaled-integer 32-point DFT (re/im exact
+      int64, |re| ≤ 2^26 so re²+im² ≤ 2^53 stays exact), magnitudes
+      floor(IEEE sqrt) — bit-identical across engines;
+    - outputs are milli-/basis-point integers via integer div; the
+      two IEEE float steps (sqrt, ×1000) are deterministic given
+      exact-integer inputs.
+
+    Fully DECLARATIVE — the whole DFT runs as codegen'd array
+    expressions (transform/aggregate/zip_with), no Python worker at
+    all, unlike the Arrow-batched float operator.  One narrow
+    projection, no shuffle, no join."""
+    tc, ts = _audio_twiddles()
+    tc_csv = ",".join(str(v) for v in tc.ravel())
+    ts_csv = ",".join(str(v) for v in ts.ravel())
+    d = (_t(spark, sf_dir, "documents")
+         .filter((F.col("doc_id") < 200) & (F.col("doc_id") % 3 == 1)))
+    n, bins = AUDIO_DFT_N, AUDIO_DFT_BINS
+    base = d.select(
+        F.col("doc_id").alias("media_id"),
+        F.sha2(F.col("text").cast("binary"), 256).alias("hx"))
+    xs = (f"transform(sequence(0,{n - 1}), i -> "
+          f"cast(conv(substring(hx, 2*i+1, 2), 16, 10) as bigint)"
+          f" - 128)")
+    w = base.select(
+        "media_id",
+        F.expr(xs).alias("xs"),
+        F.expr(f"array({tc_csv})").alias("tc"),
+        F.expr(f"array({ts_csv})").alias("tsn"))
+    spec = (w
+            .withColumn("sumsq", F.expr(
+                "aggregate(xs, 0L, (a, v) -> a + v * v)"))
+            .withColumn("zc", F.expr(
+                f"aggregate(sequence(2,{n}), 0L, (a, i) -> a + "
+                f"if((element_at(xs,i) < 0) != (element_at(xs,i-1) < 0),"
+                f" 1L, 0L))"))
+            .withColumn("re", F.expr(
+                f"transform(sequence(1,{bins}), k -> "
+                f"aggregate(sequence(1,{n}), 0L, (a, i) -> a + "
+                f"element_at(xs,i) * element_at(tc,(k)*{n} + i)))"))
+            .withColumn("im", F.expr(
+                f"transform(sequence(1,{bins}), k -> "
+                f"aggregate(sequence(1,{n}), 0L, (a, i) -> a + "
+                f"element_at(xs,i) * element_at(tsn,(k)*{n} + i)))"))
+            .withColumn("mag", F.expr(
+                "zip_with(re, im, (r, s) -> cast(floor(sqrt("
+                "cast(r*r + s*s as double))) as bigint))"))
+            .withColumn("tot", F.expr(
+                "aggregate(mag, 0L, (a, v) -> a + v)")))
+    return (spec.select(
+        "media_id", "sumsq",
+        F.expr("cast(floor(sqrt(sumsq / 32.0D) * 1000.0D) as bigint)")
+        .alias("rms_mbp"),
+        F.expr("(10000L * zc) div 31").alias("zcr_bp"),
+        F.expr(f"if(tot = 0, 0L, (10000L * aggregate(sequence(1,{bins}),"
+               f" 0L, (a, k) -> a + k * element_at(mag, k)))"
+               f" div ({bins} * tot))").alias("centroid_bp"),
+        F.expr(f"if(tot = 0, 0L, 1L + size(filter(sequence(1,{bins}),"
+               f" k -> 20 * aggregate(slice(mag, 1, k), 0L,"
+               f" (a, v) -> a + v) < 17 * tot)))").alias("rolloff_bin"))
+        .orderBy("media_id"))
+
+
+def _sql_audio_descriptors_bp() -> str:
+    tc, ts = _audio_twiddles()
+    tc_csv = ",".join(str(v) for v in tc.ravel())
+    ts_csv = ",".join(str(v) for v in ts.ravel())
+    n, bins = AUDIO_DFT_N, AUDIO_DFT_BINS
+    return f"""
+WITH m AS (
+  SELECT doc_id AS media_id, sha256(text) AS hx
+  FROM documents WHERE doc_id < 200 AND doc_id % 3 = 1),
+x AS (
+  SELECT media_id,
+         list_transform(generate_series(0, {n - 1}),
+           i -> CAST('0x' || substr(hx, 2*i + 1, 2) AS BIGINT) - 128)
+           AS xs
+  FROM m),
+tw AS (SELECT [{tc_csv}] AS tc, [{ts_csv}] AS tsn),
+reim AS (
+  -- each bin's re/im sum computed ONCE (the magnitude expression
+  -- would otherwise evaluate every O(n) sum twice)
+  SELECT media_id,
+         list_sum(list_transform(xs, v -> v * v)) AS sumsq,
+         list_sum(list_transform(generate_series(2, {n}),
+           i -> CASE WHEN (xs[i] < 0) <> (xs[i-1] < 0)
+                THEN 1 ELSE 0 END)) AS zc,
+         list_transform(generate_series(1, {bins}), k ->
+           list_sum(list_transform(generate_series(1, {n}),
+             i -> xs[i] * tc[k*{n} + i]))) AS re,
+         list_transform(generate_series(1, {bins}), k ->
+           list_sum(list_transform(generate_series(1, {n}),
+             i -> xs[i] * tsn[k*{n} + i]))) AS im
+  FROM x, tw),
+spec AS (
+  SELECT media_id, sumsq, zc,
+         list_transform(generate_series(1, {bins}), k ->
+           CAST(floor(sqrt(CAST(re[k]*re[k] + im[k]*im[k]
+                           AS DOUBLE))) AS BIGINT)) AS mag
+  FROM reim),
+agg AS (SELECT *, list_sum(mag) AS tot FROM spec)
+SELECT media_id, CAST(sumsq AS BIGINT) AS sumsq,
+  CAST(floor(sqrt(sumsq / 32.0) * 1000.0) AS BIGINT) AS rms_mbp,
+  CAST((10000 * zc) // 31 AS BIGINT) AS zcr_bp,
+  CAST(CASE WHEN tot = 0 THEN 0 ELSE
+    (10000 * list_sum(list_transform(generate_series(1, {bins}),
+      k -> k * mag[k]))) // ({bins} * tot) END AS BIGINT)
+    AS centroid_bp,
+  CAST(CASE WHEN tot = 0 THEN 0 ELSE
+    1 + len(list_filter(generate_series(1, {bins}),
+      k -> 20 * list_sum(mag[:k]) < 17 * tot)) END AS BIGINT)
+    AS rolloff_bin
+FROM agg ORDER BY media_id
+"""
+
+
+# --------------------------- curation with the semantic second pass -
+
+def q_llm_curation_sem(spark, sf_dir):
+    """END-TO-END modern corpus curation — ``llm_curation``'s lexical
+    pipeline with the SEMANTIC second dedup pass public LLM-corpus
+    pipelines run after MinHash (the SemDeDup position):
+
+      1. quality cut (token count in [CURATE_TOK_MIN, CURATE_TOK_MAX]),
+      2. lexical near-dup dedup: MinHash LSH pairs → connected
+         components → one representative per cluster,
+      3. SEMANTIC dedup over the lexical survivors: their embeddings
+         (vec_id = doc_id) quantized, clustered with subset-safe
+         integer Lloyd (seed_smallest — survivor ids are not dense),
+         within-cell cosine ≥ τ keep-earliest, flagged docs dropped;
+         docs with no embedding row (or a zero-norm one) pass through
+         — no vector, no semantic evidence,
+      4. decontamination: drop survivors sharing any word 5-gram with
+         the 'src0' benchmark split.
+
+    Emits the 5-stage survival funnel (docs + tokens).  Every stage
+    is integer-exact, so the WHOLE pipeline carries one composed
+    DuckDB oracle (the lexical block is llm_curation's; the semantic
+    block is llm_semdedup's, namespaced and re-pointed at the
+    survivor subset).  Scale shape: inherits each stage's argued
+    shape — banded MinHash, within-cell pairs only, broadcast
+    benchmark grams; the new joins are all keyed by doc id."""
+    from pyspark.sql import Window
+
+    from ..llm.dedup import (dedup_components, minhash_pairs_staged,
+                             shingles)
+    from ..llm.semdedup import assign_cells, dot_over
+    from ..ml.intlloyd import integer_lloyd
+    d = _t(spark, sf_dir, "documents")
+    ntok = F.size(F.split(F.lower(F.trim("text")), " "))
+    q = (d.withColumn("n_tok", ntok.cast("bigint"))
+         .filter(ntok.between(CURATE_TOK_MIN, CURATE_TOK_MAX)))
+
+    pairs = minhash_pairs_staged(
+        q, _staging(sf_dir, "curation_sem_minhash"), threshold=0.2)
+    comp = dedup_components(pairs, q.select("doc_id"))
+    sized = comp.join(q.select("doc_id", "n_chars"), "doc_id")
+    w = Window.partitionBy("component").orderBy(F.desc("n_chars"),
+                                                "doc_id")
+    # rep_ids feeds THREE consumers (the semantic subset join, the
+    # dedup funnel row via repd, and the survivors' base) — the
+    # llm_curation checkpoint argument verbatim
+    rep_ids = (sized.select("doc_id", F.row_number().over(w).alias("rn"))
+               .filter(F.col("rn") == 1).select("doc_id")
+               # lazy (r15): all three consumers sit inside the one
+               # final action — blocks persist at first touch there
+               .localCheckpoint(eager=False))
+    repd = q.join(rep_ids, "doc_id")
+
+    emb = (_t(spark, sf_dir, "embeddings")
+           .join(rep_ids.select(F.col("doc_id").alias("vec_id")),
+                 "vec_id"))
+    # lazy checkpoint replaces the r14 parquet staging (see
+    # q_llm_semdedup) — the survivor-subset quantized table
+    # materializes under the Lloyd seed collect (which also pulls
+    # rep_ids' blocks into existence) and is reused by both pair
+    # sides from blocks
+    arrq = quantize(emb).localCheckpoint(eager=False)
+    cents = integer_lloyd(arrq, SEM_CELLS, SEM_ITERS, SEM_DIM,
+                          seed_smallest=True)
+    vecs = assign_cells(arrq, cents).localCheckpoint(eager=False)
+    a = vecs.select(F.col("vec_id").alias("ai"),
+                    F.col("qa").alias("aq"), "cell",
+                    F.col("n2").alias("a2"))
+    b = vecs.select(F.col("vec_id").alias("bi"),
+                    F.col("qa").alias("bq"), "cell",
+                    F.col("n2").alias("b2"))
+    dropped = (a.join(b, "cell").filter(F.col("ai") < F.col("bi"))
+               .filter(sem_cond(dot_over("aq", "bq"), F.col("a2"),
+                                F.col("b2"), SEM_TAU2_BP))
+               .select(F.col("bi").alias("doc_id")).distinct())
+    semd = repd.join(dropped, "doc_id", "left_anti")
+
+    corpus = semd.filter(F.col("source") != "src0")
+    bench = (q.filter(F.col("source") == "src0")
+             .select(F.explode(shingles("text", 5)).alias("g"))
+             .distinct())
+    cont = (corpus.select("doc_id",
+                          F.explode(shingles("text", 5)).alias("g"))
+            .join(F.broadcast(bench), "g").select("doc_id").distinct())
+    clean = corpus.join(cont, "doc_id", "left_anti")
+
+    def stage(i, name, df):
+        return df.agg(F.lit(i).alias("stage_id"),
+                      F.lit(name).alias("stage"),
+                      F.count(F.lit(1)).alias("n_docs"),
+                      F.sum(F.size(F.split(F.lower(F.trim("text")), " "))
+                            .cast("bigint")).alias("n_tokens"))
+
+    return (stage(1, "start", d)
+            .unionByName(stage(2, "quality", q.drop("n_tok")))
+            .unionByName(stage(3, "dedup", repd))
+            .unionByName(stage(4, "semdedup", semd))
+            .unionByName(stage(5, "decontam", clean))
+            .orderBy("stage_id"))
+
+
+def _sql_llm_curation_sem() -> str:
+    from .dedup import sql_dedup_groups
+    groups = sql_dedup_groups().replace("FROM documents", "FROM qdocs")
+    gram5 = ("UNNEST(list_transform(generate_series(1, len(ws) - 4), "
+             "i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' "
+             "|| ws[i+3] || ' ' || ws[i+4]))")
+    tok = "len(string_split(lower(trim(text)), ' '))"
+    sem = ",\n".join(_sql_sem_parts(
+        prefix="s",
+        src=("(SELECT e.vec_id, e.embedding FROM embeddings e "
+             "JOIN repd r ON r.doc_id = e.vec_id)"),
+        seed_smallest=True))
+    return f"""
+WITH qdocs AS (
+  SELECT * FROM documents
+  WHERE {tok} BETWEEN {CURATE_TOK_MIN} AND {CURATE_TOK_MAX}),
+comp AS (SELECT * FROM ({groups}) g),
+reps AS (
+  SELECT c.doc_id,
+         ROW_NUMBER() OVER (PARTITION BY c.component
+                            ORDER BY d.n_chars DESC, c.doc_id) AS rn
+  FROM comp c JOIN qdocs d USING (doc_id)),
+repd AS (SELECT d.* FROM qdocs d
+         JOIN reps r ON r.doc_id = d.doc_id AND r.rn = 1),
+{sem},
+semd AS (SELECT * FROM repd
+         WHERE doc_id NOT IN (SELECT vec_id FROM sdr)),
+corpus AS (SELECT * FROM semd WHERE source <> 'src0'),
+bench AS (
+  SELECT DISTINCT {gram5} AS g
+  FROM (SELECT string_split(lower(trim(text)), ' ') AS ws
+        FROM qdocs WHERE source = 'src0')),
+cont AS (
+  SELECT DISTINCT doc_id
+  FROM (SELECT doc_id, {gram5} AS g
+        FROM (SELECT doc_id, string_split(lower(trim(text)), ' ') AS ws
+              FROM corpus)) cg
+  JOIN bench USING (g)),
+clean AS (SELECT * FROM corpus
+          WHERE doc_id NOT IN (SELECT doc_id FROM cont))
+SELECT 1 AS stage_id, 'start' AS stage, COUNT(*) AS n_docs,
+       CAST(SUM({tok}) AS BIGINT) AS n_tokens FROM documents
+UNION ALL SELECT 2, 'quality', COUNT(*), CAST(SUM({tok}) AS BIGINT)
+FROM qdocs
+UNION ALL SELECT 3, 'dedup', COUNT(*), CAST(SUM({tok}) AS BIGINT)
+FROM repd
+UNION ALL SELECT 4, 'semdedup', COUNT(*), CAST(SUM({tok}) AS BIGINT)
+FROM semd
+UNION ALL SELECT 5, 'decontam', COUNT(*), CAST(SUM({tok}) AS BIGINT)
+FROM clean
+ORDER BY stage_id
+"""
+
+
+SQL_LLM_CURATION_SEM = _sql_llm_curation_sem()
+
+
+register({
     "llm_curation":         {"fn": q_llm_curation,
                              "sql": _sql_llm_curation()},
     "llm_curation_lines":   {"fn": q_llm_curation_lines,
@@ -1073,21 +1302,23 @@ QUERIES_PIPELINES: dict[str, dict] = {
                              "sql": _sql_tile_train()},
     "lcmap_predict_chip":   {"fn": q_lcmap_predict_chip,
                              "sql": _sql_predict_chip()},
-    "llm_minhash_pipeline": {"fn": q_llm_minhash_pipeline,
-                             "sql": _sql_minhash_pipeline()},
     "lcmap_prediction":     {"fn": q_lcmap_prediction,
                              "sql": _sql_predict_chip(side=8)},
-    "llm_ann_topk":         {"fn": q_llm_ann_topk,         "sql": _sql_ann_topk()},
-    "llm_ann_ivf":          {"fn": q_llm_ann_ivf,          "sql": None},
     "src_chipmunk":         {"fn": q_src_chipmunk,
                              "sql": _sql_src_chipmunk()},
-    "approx_sketches":      {"fn": q_approx_sketches,
-                             "sql": SQL_APPROX_SKETCHES},
-    "kmv_sketch":           {"fn": q_kmv_sketch,           "sql": SQL_KMV_SKETCH},
     "mm_extract_features":  {"fn": q_mm_extract_features,
                              "sql": _sql_mm_features()},
     "mm_resize":            {"fn": q_mm_resize,
                              "sql": _sql_mm_resize()},
     "mm_frame_sample":      {"fn": q_mm_frame_sample,
                              "sql": _sql_mm_frame_sample()},
-}
+    "mm_phash_pairs":     {"fn": q_mm_phash_pairs,
+                           "sql": _sql_mm_phash_pairs()},
+    "mm_audio_features":  {"fn": q_mm_audio_features,  "sql": None},
+    "llm_trainprep":      {"fn": q_llm_trainprep,
+                           "sql": SQL_LLM_TRAINPREP},
+    "mm_audio_descriptors_bp": {"fn": q_mm_audio_descriptors_bp,
+                                "sql": _sql_audio_descriptors_bp()},
+    "llm_curation_sem": {"fn": q_llm_curation_sem,
+                         "sql": SQL_LLM_CURATION_SEM},
+})

@@ -71,7 +71,7 @@ def synth_ard_hash(spark: SparkSession, cx: int = 0, cy: int = 0,
     """SQL-expressible twin of ``synth_ard``: every raster cell is a
     deterministic md5 function of (band, pixel-index, day) — no numpy
     RNG — so a DuckDB oracle can regenerate the identical chip with
-    SQL alone (registry_pipelines._sql_segment_detect). Acquisition
+    SQL alone (registry.pipelines._sql_segment_detect). Acquisition
     days are 17 + 311·a (a < n_acq, same 1984-2018 span as synth_ard);
     spectral values are 500 + (h mod 3000); ~15% of cells are cloudy
     (h mod 100 < 15 on the qa band)."""

@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 # entity → partition columns (mirrors the URL scheme ceph.py:17-49);
 # rollup_partial is the streaming-rollup partial store, partitioned by
@@ -29,6 +30,7 @@ PARTITION_KEYS = {
     "chip": ("cx", "cy"),
     "pixel": ("cx", "cy"),
     "segment": ("cx", "cy"),
+    "aux": ("cx", "cy"),
     "prediction": ("cx", "cy"),
     "tile": ("tx", "ty"),
     "rollup_partial": ("batch_id",),
@@ -43,7 +45,20 @@ def path(root: str, entity: str) -> str:
 
 
 def read(spark: SparkSession, root: str, entity: str) -> DataFrame:
-    return spark.read.parquet(path(root, entity))
+    """Whole-entity scan.  Partition discovery types the key
+    directories as INT; they are read as BIGINT instead, the type of
+    the chip/tile keys every plan compares them with
+    (``plans.training.chips_predicate``).  The type goes into the read
+    schema rather than a cast over the scan: with the cast, a
+    /prediction request measured about 1 s slower (4-core host)."""
+    p = path(root, entity)
+    df = spark.read.parquet(p)
+    keys = set(PARTITION_KEYS.get(entity, ())) & set(df.columns)
+    if not keys:
+        return df
+    return spark.read.schema(StructType([
+        StructField(f.name, LongType(), f.nullable) if f.name in keys else f
+        for f in df.schema])).parquet(p)
 
 
 def read_partition(spark: SparkSession, root: str, entity: str,

@@ -146,7 +146,7 @@ EWMA_STATE = T.StructType([
 def ewma_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Stateful streaming EWMA (alpha = 1/2) of event values per
     user: s = (x + s_prev) / 2 — the O(1)-state streaming twin of the
-    batch window smoother (registry_ext7.q_ewma_smooth keeps 8 lags;
+    batch window smoother (registry.analytics.q_ewma_smooth keeps 8 lags;
     the recursion keeps ONE double per user regardless of stream
     length).  Emits one row per event.
 
@@ -301,7 +301,7 @@ def zscore_stream(events: DataFrame, watermark: str = "2 hours",
                   win: int = 32, min_n: int = 8,
                   k: int = 3) -> DataFrame:
     """Stateful streaming anomaly detector — the streaming twin of
-    the batch ``rolling_zscore`` query (registry_ext11): an event is
+    the batch ``rolling_zscore`` query (registry.analytics): an event is
     flagged when its integer-cent value deviates more than k·σ from
     the trailing ``win`` events of its type, with mean/variance from
     exact integer sums and the test cross-multiplied to ONE integer
@@ -415,7 +415,7 @@ def twavg_stream(events: DataFrame,
                  watermark: str = "2 hours") -> DataFrame:
     """Stateful streaming TIME-WEIGHTED AVERAGE per user — the
     O(1)-state LOCF twin of the batch ``twavg`` query
-    (registry_ext14.q_twavg, the TimescaleDB time_weight('LOCF')
+    (registry.analytics.q_twavg, the TimescaleDB time_weight('LOCF')
     shape): each reading's value holds until the next reading, so an
     arriving event CLOSES the previous reading's interval and the
     running average re-emits.  State per user is six scalars (the
@@ -500,7 +500,7 @@ STATE_AGG_STATE = T.StructType([
 def state_agg_stream(events: DataFrame,
                      watermark: str = "2 hours") -> DataFrame:
     """Stateful streaming TIME-IN-STATE per (user, event_type) — the
-    LOCF twin of the batch ``state_agg`` query (registry_ext14.
+    LOCF twin of the batch ``state_agg`` query (registry.analytics.
     q_state_agg, the TimescaleDB state_agg shape): a user is "in"
     the state of their latest event until the next event, so an
     arriving event closes the PREVIOUS state's dwell period and that
@@ -721,7 +721,7 @@ def winnow_dedup_stream(docs: DataFrame, store_dir: str,
                         update_store: bool = True):
     """STREAMING winnowing ingest dedup: per micro-batch, fingerprint
     the incoming documents ONCE (robust winnowing —
-    registry_ext18.winnow_fingerprints, the batch `llm_winnow_pairs`
+    registry.dedup.winnow_fingerprints, the batch `llm_winnow_pairs`
     selection) and flag any that near-duplicate the persisted
     FINGERPRINT STORE.  Third member of the streaming dedup family
     beside the MinHash signature store (ingest_dedup_stream) and the
@@ -1032,7 +1032,7 @@ def session_windows(events: DataFrame, gap_minutes: int = 30,
                     watermark: str = "2 hours") -> DataFrame:
     """Custom stateful streaming operator: gap-based sessionization via
     ``applyInPandasWithState`` — the streaming twin of the batch
-    ``registry_ext.q_sessionize`` (same 30-min inactivity rule).
+    ``registry.analytics.q_sessionize`` (same 30-min inactivity rule).
 
     State per user is one open session (start, end, count) — O(1) per
     key regardless of stream length. A session is emitted when a later
@@ -1213,7 +1213,7 @@ def snapshot_ingest_stream(spark: SparkSession, events_dir: str,
     crash window write_snapshot documents).
 
     The streaming twin of the batch ``snapshot_expectations`` funnel
-    (registry_ext15): the same rows streamed through this job and
+    (registry.snapshot): the same rows streamed through this job and
     committed in one batch write must leave identical kept /
     quarantined / per-constraint-count states
     (tests/test_streaming_expectations.py)."""

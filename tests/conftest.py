@@ -66,6 +66,9 @@ SLOW_SUITES = {
 }
 
 
+_DEFERRED: dict[str, int] = {}
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
@@ -73,5 +76,18 @@ def pytest_collection_modifyitems(config, items):
         reason="slow suite deferred by the driver-gate fast path; "
                "set SPARK_GRAFT_FULL_TESTS=1 for the full run")
     for item in items:
-        if os.path.basename(str(item.fspath)) in SLOW_SUITES:
+        module = os.path.basename(str(item.fspath))
+        if module in SLOW_SUITES:
             item.add_marker(skip)
+            _DEFERRED[module] = _DEFERRED.get(module, 0) + 1
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say what the fast path left out, so a default run is not
+    mistaken for the full suite."""
+    if _DEFERRED:
+        terminalreporter.write_line(
+            f"deferred {len(_DEFERRED)} slow modules "
+            f"({sum(_DEFERRED.values())} tests); set "
+            "SPARK_GRAFT_FULL_TESTS=1 to run them: "
+            + ", ".join(sorted(_DEFERRED)))

@@ -2,16 +2,13 @@
 (tools/bench_families.py): every headline query classifies into
 exactly one family, each family carries the anchor VERDICT r11
 prescribed (snapshot/write-heavy → disk_anchor_sec, Arrow-pandas →
-python_anchor_sec, codegen → anchor_sec), and the committed
-BENCH_FAMILIES.json matches a regeneration from the committed
-bench_detail.json so the triage artifact can't silently go stale."""
+python_anchor_sec, codegen → anchor_sec).  The families are printed
+on demand from bench_detail.json, never committed beside it, so there
+is no second artifact to go stale."""
 
 import json
 import os
-import subprocess
 import sys
-
-import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
@@ -22,27 +19,6 @@ from bench_families import FAMILY_ANCHOR, family_of, summarize  # noqa: E402
 def _detail():
     with open(os.path.join(REPO, "bench_detail.json")) as fh:
         return json.load(fh)
-
-
-def _committed(path):
-    """Load `path` as committed at HEAD, not the working-tree copy.
-
-    The round driver re-runs bench.py before judging, overwriting the
-    working-tree bench_detail.json; pinning the committed artifact to
-    the committed detail keeps the staleness check meaningful without
-    going red whenever the driver has freshened the working tree
-    (VERDICT r12 item 1).
-    """
-    try:
-        out = subprocess.run(
-            ["git", "-C", REPO, "show", "HEAD:" + path],
-            capture_output=True, timeout=30,
-        )
-    except (OSError, subprocess.TimeoutExpired):
-        pytest.skip("git unavailable; cannot read committed artifact")
-    if out.returncode != 0:
-        pytest.skip("%s not committed at HEAD" % path)
-    return json.loads(out.stdout)
 
 
 def test_every_headline_query_classified():
@@ -58,11 +34,6 @@ def test_every_headline_query_classified():
     for f, rec in fams.items():
         assert rec["anchor"] == d.get(FAMILY_ANCHOR[f])
         assert rec["normalized"] and rec["normalized"] > 0
-
-
-def test_committed_artifact_matches_regeneration():
-    committed = _committed("BENCH_FAMILIES.json")
-    assert committed["families"] == summarize(_committed("bench_detail.json"))
 
 
 def test_family_of_total():

@@ -18,6 +18,8 @@ meltdowns and mass-failure ERR maps.
 import json
 import re
 
+from bench import compact
+
 CAP = 1980
 
 
@@ -30,13 +32,6 @@ def _headline():
     return names
 
 
-def _compact(v):
-    if not isinstance(v, float):
-        return "ERR"
-    r = round(v, 1)
-    return int(r) if r == int(r) else r
-
-
 def test_realistic_envelope_carries_every_entry_unfolded():
     """Every query at a 3-char 1-decimal median ("9.9") plus the 15
     heaviest at 4 chars ("99.9") and an errors field — the worst
@@ -47,7 +42,7 @@ def test_realistic_envelope_carries_every_entry_unfolded():
     out = {
         "metric": "headline_queries_total", "value": 9999.9,
         "unit": "sec",
-        "queries": {n: _compact(99.9 if i < 15 else 9.9)
+        "queries": {n: compact(99.9 if i < 15 else 9.9)
                     for i, n in enumerate(names)},
         "sf": 0.1, "errors": 1,
     }
@@ -66,18 +61,19 @@ def test_integral_medians_print_as_ints():
     """The zero-fold envelope depends on integral medians costing
     "11" not "11.0" — pin the encoder's behavior and its presence in
     bench.py so a formatting regression re-runs the envelope math."""
-    assert _compact(11.0) == 11 and isinstance(_compact(11.0), int)
-    assert _compact(11.04) == 11 and isinstance(_compact(11.04), int)
-    assert _compact(1.25) == 1.2           # bankers' via round()
-    assert _compact("boom") == "ERR"
+    assert compact(11.0) == 11 and isinstance(compact(11.0), int)
+    assert compact(11.04) == 11 and isinstance(compact(11.04), int)
+    assert compact(1.25) == 1.2           # bankers' via round()
+    assert compact(11) == 11               # an int median is a timing
+    assert compact("boom") == "ERR"
     import os
     src = open(os.path.join(os.path.dirname(__file__), "..",
                             "bench.py")).read()
     assert "return int(r) if r == int(r) else r" in src
     assert '"value": round(total, 1),' in src
     # anchor_sec appears in the DETAIL dict, never in the compact out
-    compact = src[src.index('out = {'):src.index('if failed:')]
-    assert '"anchor_sec"' not in compact.replace(
+    out_src = src[src.index('out = {'):src.index('if failed:')]
+    assert '"anchor_sec"' not in out_src.replace(
         '# anchor_sec / python_anchor_sec / disk_anchor_sec', '')
 
 

@@ -45,51 +45,51 @@ AGG_MARKERS = (".groupBy(", ".agg(", ".distinct()", ".dropDuplicates(")
 # bench" is not one.
 ALLOWED: dict[str, str] = {
     # ---- one-row (or constant-row) global aggregates ----
-    "registry_ext12.py:q_rank_ratios_bp:n":
+    "registry/analytics.py:q_rank_ratios_bp:n":
         "one-row global count",
-    "registry_ext22.py:q_llm_mix_balanced:budget":
+    "registry/text.py:q_llm_mix_balanced:budget":
         "one-row global min-of-domain-totals",
-    "registry_ext22.py:q_llm_mix_epochs:g":
+    "registry/text.py:q_llm_mix_epochs:g":
         "one-row global (grand total, domain count) pair",
-    "registry_ext22.py:q_llm_mix_temperature:g":
+    "registry/text.py:q_llm_mix_temperature:g":
         "one-row global (grand total, sqrt-sum) pair",
-    "registry_ext23.py:q_llm_curriculum:n":
+    "registry/text.py:q_llm_curriculum:n":
         "one-row global document count",
-    "registry_ext23.py:q_eval_mrr_map:n":
+    "registry/analytics.py:q_eval_mrr_map:n":
         "per-priority candidate counts — ≤5 groups",
-    "registry_ext23.py:q_eval_mrr_map:rtot":
+    "registry/analytics.py:q_eval_mrr_map:rtot":
         "per-priority relevant counts — ≤5 groups",
-    "registry_pipelines.py:q_kmv_sketch:n_g":
+    "registry/sketches.py:q_kmv_sketch:n_g":
         "per-returnflag counts — ≤3 flag values",
-    "registry_ext11.py:_mix_plan:tot":
+    "registry/text.py:_mix_plan:tot":
         "one-row global total",
-    "registry_ext11.py:q_class_weights:tot":
+    "registry/text.py:q_class_weights:tot":
         "one-row global total",
-    "registry_ext11.py:q_group_median_bp:n":
+    "registry/analytics.py:q_group_median_bp:n":
         "per-returnflag counts — ≤3 flag values",
-    "registry_ext11.py:q_group_quartiles_bp:n":
+    "registry/analytics.py:q_group_quartiles_bp:n":
         "per-returnflag counts — ≤3 flag values",
-    "registry_ext10.py:bucketize:n":
+    "registry/analytics.py:bucketize:n":
         "one-row global count",
-    "registry_tpch.py:_partsupp:n":
+    "registry/tpch.py:_partsupp:n":
         "one-row count (synth sizing)",
-    "registry_tpch.py:q_tpch_q11:total":
+    "registry/tpch.py:q_tpch_q11:total":
         "one-row global sum",
-    "registry_tpch.py:q_tpch_q15:top":
+    "registry/tpch.py:q_tpch_q15:top":
         "one-row max revenue",
-    "registry_tpch.py:q_tpch_q22:avg_bal":
+    "registry/tpch.py:q_tpch_q22:avg_bal":
         "one-row global average",
-    "registry_ext5.py:q_item_cooccurrence:n_orders":
+    "registry/graph.py:q_item_cooccurrence:n_orders":
         "one-row global count",
-    "registry_ext8.py:q_skew_profile:totals":
+    "registry/sketches.py:q_skew_profile:totals":
         "one-row (n_rows, n_keys, max_cnt) aggregate",
-    "registry_ext9.py:q_cusum_changepoints:mu":
+    "registry/analytics.py:q_cusum_changepoints:mu":
         "one-row global mean",
-    "registry_ext6.py:q_bm25_topk:stats":
+    "registry/ann.py:q_bm25_topk:stats":
         "one-row (n_docs, total_dl, df_i) aggregate",
-    "registry_ext6.py:q_pmi_bigrams:n_bi":
+    "registry/text.py:q_pmi_bigrams:n_bi":
         "one-row bigram total",
-    "registry_ext6.py:q_lm_score:vocab":
+    "registry/text.py:q_lm_score:vocab":
         "one-row vocabulary size",
     "operators/sampling.py:stratified_sample_hash:total":
         "one-row global count",
@@ -103,21 +103,21 @@ ALLOWED: dict[str, str] = {
     # one-level assignment resolution; its bound — ≤ DSIR_B = 4096
     # rows, a constant — is argued in the query docstring)
     # ---- group-count-bounded sides (num classes / num types) ----
-    "registry.py:q_topk_customers:top":
+    "registry/tpch.py:q_topk_customers:top":
         "top-k rows by construction",
-    "registry_ext5.py:q_mad_outliers:med":
+    "registry/analytics.py:q_mad_outliers:med":
         "per-event_type medians — ≤ num types rows",
-    "registry_ext5.py:q_mad_outliers:mad":
+    "registry/analytics.py:q_mad_outliers:mad":
         "per-event_type MADs — ≤ num types rows",
     # ---- bounded-by-contract sides ----
-    "registry_pipelines.py:_curation_stages:bench":
+    "registry/pipelines.py:_curation_stages:bench":
         "benchmark-split 5-grams — bounded by the held-out benchmark"
         " size, the 5-gram-broadcast decontam design (shared by"
         " llm_curation and llm_curation_lines)",
-    "registry_ext3.py:q_decontaminate:bench":
+    "registry/dedup.py:q_decontaminate:bench":
         "benchmark-split 5-grams — bounded by the held-out benchmark"
         " size (same contract as llm_curation)",
-    "registry_ext20.py:q_llm_curation_sem:bench":
+    "registry/pipelines.py:q_llm_curation_sem:bench":
         "benchmark-split 5-grams — bounded by the held-out benchmark"
         " size (same contract as llm_curation)",
     "storage.py:snapshot_changes:dd":

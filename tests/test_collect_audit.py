@@ -55,7 +55,7 @@ ALLOWED: dict[str, str] = {
         "distinct labels — ≤ NUM_CLASSES by the label contract",
     'operators/sampling.py:stratified_sample_approx:label_statistics(df, label_col)':
         "one row per label — ≤ NUM_CLASSES by the label contract",
-    'registry_ext19.py:q_pareto_skyline:pts.withColumn("b", bx).groupBy("b") .agg(F.max("y").alias("my"))':
+    'registry/analytics.py:q_pareto_skyline:pts.withColumn("b", bx).groupBy("b") .agg(F.max("y").alias("my"))':
         "one row per x-bucket — ≤ SKY_BUCKETS, a module constant",
     # ---- model-constant sides (k-means / IVF / BPE models) ----
     'ml/kmeans.py:kmeans_fit:long.filter(F.col("id").isin(seed_ids)) .groupBy("id").agg(F.sort_array( F.collect_list(F.struct("i", "q"))).alias("s")) .orderBy("id")':
@@ -96,7 +96,7 @@ ALLOWED: dict[str, str] = {
         "learned BPE merge table — ≤ the num_merges training budget,"
         " a call-site constant",
     # ---- Bloom-filter word rollups (bit-array size, not data size) ----
-    'registry_ext16.py:q_llm_bloom_decontam:bloom_words(bench)':
+    'registry/dedup.py:q_llm_bloom_decontam:bloom_words(bench)':
         "Bloom word rollup — ≤ BLOOM_M/64 rows, a module constant",
     'streaming/jobs.py:_load_bloom_bits:spark.read.parquet(store_dir)':
         "persisted Bloom word store — ≤ BLOOM_M/64 rows, a module"

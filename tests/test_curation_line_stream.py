@@ -9,7 +9,6 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-import lcmap_blackmagic_spark.registry  # noqa: F401  (import order)
 from lcmap_blackmagic_spark.llm.dedup import _minhash_doc_aggregate
 from lcmap_blackmagic_spark.llm.text import dsir_weights
 from lcmap_blackmagic_spark.streaming.jobs import (build_bloom_store,
@@ -84,8 +83,7 @@ def test_batch_curation_lines_funnel_shape(spark, sf_dir):
     """The batch twin (llm_curation_lines): docs monotone down the
     funnel, the line stage trims tokens without inventing docs, and
     stage names/order are the stream's."""
-    from lcmap_blackmagic_spark.registry_pipelines import (
-        q_llm_curation_lines)
+    from lcmap_blackmagic_spark.registry.pipelines import q_llm_curation_lines
     rows = q_llm_curation_lines(spark, sf_dir).collect()
     assert [r["stage"] for r in rows] == [
         "start", "linededup", "quality", "dedup", "decontam"]

@@ -1,8 +1,8 @@
 """Double-run probe: running a query twice in ONE session must give
-identical results — catches conf side-effects (the events loader sets
-`spark.sql.legacy.parquet.nanosAsLong` at call time), cached-plan
-leakage, and staging-dir staleness (the staged query forms overwrite
-a per-input staging parquet at build time).
+identical results — catches conf side-effects (a table read must
+leave the session conf alone), cached-plan leakage, and staging-dir
+staleness (the staged query forms overwrite a per-input staging
+parquet at build time).
 
 A representative sample, not all 164: every conf-toucher (events
 loaders), every staged form, and one from each determinism-sensitive

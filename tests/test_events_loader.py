@@ -49,3 +49,49 @@ def test_t_events_on_driver_fixture(spark, sf_dir):
     df = _t(spark, sf_dir, "events")
     assert isinstance(df.schema["ts"].dataType, TimestampType)
     assert df.count() > 0
+
+
+class _NoConfSpark:
+    """Spark stand-in: reads return a frame whose ts column has the
+    given type name; any ``conf.set`` fails the test."""
+
+    def __init__(self, ts_type):
+        ts_type_name = ts_type
+
+        class _Type:
+            def typeName(self):
+                return ts_type_name
+
+        class _Field:
+            dataType = _Type()
+
+        class _Frame:
+            schema = {"ts": _Field()}
+
+            def withColumn(self, name, col):
+                return self
+
+        class _Reader:
+            def parquet(self, path):
+                return _Frame()
+
+        class _Conf:
+            def set(self, key, value):
+                raise AssertionError(f"_t changed session conf {key}")
+
+        self.read, self.conf = _Reader(), _Conf()
+
+
+@pytest.mark.parametrize("ts_type", ["long", "timestamp", "timestamp_ntz"])
+@pytest.mark.parametrize("table", ["events", "orders"])
+def test_t_leaves_session_conf_unchanged(monkeypatch, table, ts_type):
+    """Spark-free: reading a table must not mutate the session conf
+    (nanosAsLong lives in ENGINE_CONF instead)."""
+    import types
+
+    from lcmap_blackmagic_spark import ENGINE_CONF
+    from lcmap_blackmagic_spark.registry import base
+    monkeypatch.setattr(base, "F", types.SimpleNamespace(
+        timestamp_micros=lambda c: c, expr=lambda s: s))
+    base._t(_NoConfSpark(ts_type), "/nonexistent", table)
+    assert ENGINE_CONF["spark.sql.legacy.parquet.nanosAsLong"] == "true"

@@ -1,21 +1,23 @@
-"""Scheduling operators (registry_ext23): line-level corpus rewrite,
-multi-epoch shuffle schedule, curriculum tiers.  Value parity with
-DuckDB is covered by tests/test_oracle_parity.py; these pin the
-SEMANTIC properties — a pure-Python independent recompute of the
-line-dedup rewrite (a second oracle that shares nothing with either
-engine's SQL), permutation/contiguity of the shuffle schedule, and
-tie-collapsed tier monotonicity."""
+"""Scheduling operators (registry.text, registry.dedup): line-level
+corpus rewrite, multi-epoch shuffle schedule, curriculum tiers.
+Value parity with DuckDB is covered by tests/test_oracle_parity.py;
+these pin the SEMANTIC properties — a pure-Python independent
+recompute of the line-dedup rewrite (a second oracle that shares
+nothing with either engine's SQL), permutation/contiguity of the
+shuffle schedule, and tie-collapsed tier monotonicity."""
 
 import collections
 
 import pytest
 from pyspark.sql import functions as F
 
-import lcmap_blackmagic_spark.registry  # noqa: F401  (import order)
-from lcmap_blackmagic_spark.registry_ext23 import (
-    CURR_TIERS, EPOCHS, LINE_MAXOCC, LINE_W, SHUFFLE_SHARDS,
-    q_llm_curriculum, q_llm_epoch_shuffle, q_llm_line_dedup,
-    q_llm_seq_pack_bestfit)
+from lcmap_blackmagic_spark.registry.dedup import (LINE_MAXOCC, LINE_W,
+                                                   q_llm_line_dedup)
+from lcmap_blackmagic_spark.registry.text import (CURR_TIERS, EPOCHS,
+                                                  SHUFFLE_SHARDS,
+                                                  q_llm_curriculum,
+                                                  q_llm_epoch_shuffle,
+                                                  q_llm_seq_pack_bestfit)
 
 
 @pytest.fixture(scope="module")
@@ -112,8 +114,9 @@ def test_eval_mrr_map_matches_python_reference(spark, sf_dir):
     integer-division term shape."""
     import hashlib
 
-    from lcmap_blackmagic_spark.registry_ext23 import (
-        MRR_PPM, MRR_SCORE_DOM, q_eval_mrr_map)
+    from lcmap_blackmagic_spark.registry.analytics import (MRR_PPM,
+                                                           MRR_SCORE_DOM,
+                                                           q_eval_mrr_map)
 
     def md48(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:12], 16)
@@ -149,8 +152,8 @@ def test_bestfit_packing_invariants(spark, sf_dir):
     placement (length-desc, doc_id-asc) order, bins are numbered by
     opening order — and on this fixture best-fit-decreasing uses no
     more bins than next-fit over the same order."""
-    from lcmap_blackmagic_spark.registry_llm2 import (
-        PACK_CAPACITY, q_seq_pack_nextfit)
+    from lcmap_blackmagic_spark.registry.text import (PACK_CAPACITY,
+                                                      q_seq_pack_nextfit)
 
     rows = q_llm_seq_pack_bestfit(spark, sf_dir).collect()
     by_bin = collections.defaultdict(list)

@@ -93,7 +93,7 @@ def test_merge_upsert_moves_the_books(spark, sf_dir):
          .select("o_orderkey", "o_orderstatus",
                  F.col("o_totalprice").cast("decimal(18,2)")
                  .alias("price")))
-    from lcmap_blackmagic_spark.registry_ext4 import _order_changes
+    from lcmap_blackmagic_spark.registry.snapshot import _order_changes
     merged = merge_into(o, _order_changes(o), "o_orderkey")
     n_before = o.count()
     n_del = o.filter(F.col("o_orderkey") % 13 == 0).count()

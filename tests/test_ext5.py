@@ -13,8 +13,9 @@ from lcmap_blackmagic_spark.llm.dedup import prefix_jaccard_pairs
 from lcmap_blackmagic_spark.operators.sketches import (
     cms_counters, cms_estimate, kmv_set_ops)
 from lcmap_blackmagic_spark.registry import QUERIES
-from lcmap_blackmagic_spark.registry_ext5 import (
-    CMS_D, CMS_W, q_funnel_steps, q_mad_outliers)
+from lcmap_blackmagic_spark.registry.analytics import (q_funnel_steps,
+                                                       q_mad_outliers)
+from lcmap_blackmagic_spark.registry.sketches import CMS_D, CMS_W
 
 
 # ---------------------------------------- prefix-filter join --------
@@ -202,7 +203,7 @@ def test_phash_pairs_find_duplicate_payloads(spark):
 
 
 def test_phash_pairs_plan_has_no_cartesian(spark, sf_dir):
-    from lcmap_blackmagic_spark.registry_ext5 import q_mm_phash_pairs
+    from lcmap_blackmagic_spark.registry.pipelines import q_mm_phash_pairs
     plan = q_mm_phash_pairs(spark, sf_dir) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -227,7 +228,7 @@ def test_audio_features_sine_golden():
 
 
 def test_audio_features_query_runs(spark, sf_dir):
-    from lcmap_blackmagic_spark.registry_ext5 import q_mm_audio_features
+    from lcmap_blackmagic_spark.registry.pipelines import q_mm_audio_features
     out = q_mm_audio_features(spark, sf_dir).collect()
     assert len(out) > 0
     assert all(r.rms >= 0 and 0 <= r.zcr <= 1 for r in out)
@@ -254,7 +255,7 @@ def test_triangle_counts_on_known_graphs(spark):
 def test_cooccurrence_lift_identity(spark, sf_dir):
     """For every returned pair: lift = n·c_ab / (c_a·c_b) recomputed
     from the row's own exact counts, and c_ab ≤ min(c_a, c_b)."""
-    from lcmap_blackmagic_spark.registry_ext5 import q_item_cooccurrence
+    from lcmap_blackmagic_spark.registry.graph import q_item_cooccurrence
     rows = q_item_cooccurrence(spark, sf_dir).collect()
     assert len(rows) > 0
     l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -267,7 +268,7 @@ def test_cooccurrence_lift_identity(spark, sf_dir):
 # ---------------------------------------- chi-square ----------------
 
 def test_chi2_nonnull_and_nonnegative(spark, sf_dir):
-    from lcmap_blackmagic_spark.registry_ext5 import q_chi2_abtest
+    from lcmap_blackmagic_spark.registry.analytics import q_chi2_abtest
     row = q_chi2_abtest(spark, sf_dir).collect()[0]
     assert min(row.a + row.b, row.c + row.d,
                row.a + row.c, row.b + row.d) > 0
@@ -279,7 +280,7 @@ def test_chi2_nonnull_and_nonnegative(spark, sf_dir):
 def test_profile_single_scan(spark, sf_dir):
     """The profiler must be ONE pass over the table: a single scan
     node (multi-distinct goes through Expand, not repeated scans)."""
-    from lcmap_blackmagic_spark.registry_ext5 import q_profile_table
+    from lcmap_blackmagic_spark.registry.sketches import q_profile_table
     plan = q_profile_table(spark, sf_dir) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1

@@ -1,7 +1,7 @@
-"""Semantic tests for the eval / IR / pipeline-utility waves
-(registry_ext6-8) — invariants the oracle-parity hash can't express:
-metric laws on constructed edge cases, partition/conservation
-checks on the fixture outputs."""
+"""Semantic tests for the eval / IR / pipeline-utility queries
+(registry.analytics, registry.ann, registry.text) — invariants the
+oracle-parity hash can't express: metric laws on constructed edge
+cases, partition/conservation checks on the fixture outputs."""
 
 import os
 

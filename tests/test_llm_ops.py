@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lcmap_blackmagic_spark.registry import QUERIES
-from lcmap_blackmagic_spark.registry_llm2 import PACK_CAPACITY
+from lcmap_blackmagic_spark.registry.text import PACK_CAPACITY
 
 
 def test_embed_quantize_reconstruction(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Data-mixing operators (registry_ext22): balanced-domain selection
+"""Data-mixing operators (registry.text): balanced-domain selection
 via the distributed two-phase prefix sum, and the data-constrained
 epoch plan.  Value parity with DuckDB is covered by
 tests/test_oracle_parity.py / LOCAL_CORRECTNESS.json; these pin the
@@ -9,9 +9,9 @@ no window partition in the plan is keyed by source alone."""
 import pytest
 from pyspark.sql import functions as F
 
-import lcmap_blackmagic_spark.registry  # noqa: F401  (import order)
-from lcmap_blackmagic_spark.registry_ext22 import (
-    MIX_SHARE_PCT, _doc_tokens, q_llm_mix_balanced, q_llm_mix_epochs)
+from lcmap_blackmagic_spark.registry.text import (MIX_SHARE_PCT, _doc_tokens,
+                                                  q_llm_mix_balanced,
+                                                  q_llm_mix_epochs)
 
 
 @pytest.fixture(scope="module")
@@ -93,8 +93,8 @@ def test_temperature_sqrt_is_exact_and_flattens(spark, sf_dir):
     sqrt (s² ≤ x < (s+1)²) for every domain, and α=0.5 must flatten
     the mixture: the smallest domain gains weight vs its
     proportional share, the largest loses."""
-    from lcmap_blackmagic_spark.registry_ext22 import (
-        MIX_SQ_SCALE, q_llm_mix_temperature)
+    from lcmap_blackmagic_spark.registry.text import (MIX_SQ_SCALE,
+                                                      q_llm_mix_temperature)
     import math
     rows = q_llm_mix_temperature(spark, sf_dir).collect()
     assert len(rows) > 1

@@ -1,4 +1,4 @@
-"""Invariants of the derived partsupp relation (registry_tpch._partsupp):
+"""Invariants of the derived partsupp relation (registry.tpch._partsupp):
 referential integrity against supplier, uniqueness of (part, supplier),
 exact 4-per-part cardinality, and exact-decimal cost bounds — these are
 what make the Q2/Q11/Q16/Q20 oracles sound at any SF."""
@@ -6,7 +6,7 @@ what make the Q2/Q11/Q16/Q20 oracles sound at any SF."""
 from pyspark.sql import functions as F
 
 from lcmap_blackmagic_spark.registry import _t
-from lcmap_blackmagic_spark.registry_tpch import _partsupp
+from lcmap_blackmagic_spark.registry.tpch import _partsupp
 
 
 def test_partsupp_invariants(spark, sf_dir):

@@ -42,7 +42,7 @@ GLOBAL_WINDOW_OK: set[str] = {
     # span (weeks since epoch), not by table size
     "wow_growth",
     # ntile oracle-parity twins; the at-scale forms are the _bp
-    # breakpoint queries (registry_ext10), which pass unallowlisted
+    # breakpoint queries (registry.analytics), which pass unallowlisted
     "quality_deciles",
     "rfm_scores",
     # rank windows over the two TakeOrdered top-k cuts (lexical +

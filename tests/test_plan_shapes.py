@@ -425,8 +425,8 @@ def test_kcenter_step_plan_is_shuffle_free(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from lcmap_blackmagic_spark.registry import _t
-    from lcmap_blackmagic_spark.registry_ext11 import (KC_DIM, KC_QSCALE,
-                                                       kcenter_step)
+    from lcmap_blackmagic_spark.registry.ann import (KC_DIM, KC_QSCALE,
+                                                     kcenter_step)
     e = _t(spark, sf_dir, "embeddings")
     arr = e.select(
         "vec_id",
@@ -450,8 +450,7 @@ def test_skew_distinct_split_stage1_shuffles_on_bucket(spark, sf_dir):
     bounding each reducer at 1/SPLIT_BUCKETS of a hot key's value
     set — and only the tiny (key × bucket) partial table may shuffle
     on the key alone."""
-    from lcmap_blackmagic_spark.registry_ext17 import \
-        q_skew_distinct_split
+    from lcmap_blackmagic_spark.registry.sketches import q_skew_distinct_split
     df = q_skew_distinct_split(spark, sf_dir)
     plan = simple_plan(df)
     # the distinct aggregation keys include the bucket expression

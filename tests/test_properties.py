@@ -210,8 +210,7 @@ def test_pareto_skyline_matches_bruteforce(spark, xy):
     x' ≥ x and y' ≥ y with one strict."""
     from pyspark.sql import Window
 
-    import lcmap_blackmagic_spark.registry  # noqa: F401 — wave-module cycle
-    from lcmap_blackmagic_spark.registry_ext19 import SKY_BUCKETS
+    from lcmap_blackmagic_spark.registry.analytics import SKY_BUCKETS
 
     pts = {}
     for x, y in xy:

@@ -1,4 +1,4 @@
-"""Retrieval-surface semantics (registry_ext22): filtered vector
+"""Retrieval-surface semantics (registry.ann): filtered vector
 search and reciprocal-rank fusion.  Value parity with DuckDB is
 covered by the oracle harness; these pin the properties the oracle
 replays but does not ASSERT — the filter actually restricts the
@@ -8,10 +8,9 @@ its defining arithmetic."""
 import pytest
 from pyspark.sql import functions as F
 
-import lcmap_blackmagic_spark.registry  # noqa: F401  (import order)
-from lcmap_blackmagic_spark.registry_ext22 import (
-    ANN_FILTER_MOD, RRF_K, RRF_SCALE, q_llm_ann_filtered,
-    q_llm_rrf_fusion)
+from lcmap_blackmagic_spark.registry.ann import (ANN_FILTER_MOD, RRF_K,
+                                                 RRF_SCALE, q_llm_ann_filtered,
+                                                 q_llm_rrf_fusion)
 
 
 @pytest.fixture(scope="module")
@@ -34,8 +33,7 @@ def test_filter_shares_the_index_and_restricts_it(spark, sf_dir,
     """Same index, restricted candidates: every query still gets
     answers (pre-filtering does not starve), and at least one query's
     neighbor set genuinely changed vs the unfiltered index."""
-    from lcmap_blackmagic_spark.registry_ext19 import (
-        IVX_K, q_llm_ann_ivf_exact)
+    from lcmap_blackmagic_spark.registry.ann import IVX_K, q_llm_ann_ivf_exact
     unf = q_llm_ann_ivf_exact(spark, sf_dir).collect()
     f_by_q, u_by_q = {}, {}
     for r in filtered:

@@ -31,8 +31,7 @@ def test_approx_sketches_bound_is_sharp(spark, sf_dir):
     """The tolerance must actually discriminate: a sketch answer
     shifted by 2× the allowed distinct-count error must flip
     orders_ok to False under the same integer arithmetic."""
-    from lcmap_blackmagic_spark.registry_pipelines import \
-        SKETCH_CD_TOL_BP
+    from lcmap_blackmagic_spark.registry.sketches import SKETCH_CD_TOL_BP
     rows = QUERIES["approx_sketches"]["fn"](spark, sf_dir).collect()
     for r in rows:
         exact = r["exact_orders"]

@@ -5,8 +5,8 @@ for the two registered queries runs in test_oracle_parity.py)."""
 from pyspark.sql import functions as F
 
 from lcmap_blackmagic_spark.registry import QUERIES, q_revenue_by_nation
-from lcmap_blackmagic_spark.sql_catalog import (
-    TABLES, q_sql_text_revenue, register_views)
+from lcmap_blackmagic_spark.registry.base import TABLES, register_views
+from lcmap_blackmagic_spark.registry.sql import q_sql_text_revenue
 
 
 def test_views_cover_every_table(spark, sf_dir):

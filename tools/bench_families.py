@@ -8,12 +8,13 @@ round-over-round move is read against the RIGHT host denominator
 see; round 11's watch item was python-pool variance).
 
 Usage:
-    python tools/bench_families.py [current_detail] [prev_detail] \
-        [out_json]
+    python tools/bench_families.py [current_detail] [prev_detail]
 
 defaults: bench_detail.json, BENCH_r11.json-era bench_detail is not
 kept per-round, so prev defaults to none (families still emitted,
-ratios omitted).  Writes BENCH_FAMILIES.json.
+ratios omitted).  Prints the families as JSON on stdout; the output is
+a pure function of the detail file, so it is regenerated on demand
+rather than committed beside it.
 """
 
 from __future__ import annotations
@@ -72,8 +73,6 @@ def main() -> None:
     cur_p = sys.argv[1] if len(sys.argv) > 1 else \
         os.path.join(REPO, "bench_detail.json")
     prev_p = sys.argv[2] if len(sys.argv) > 2 else None
-    out_p = sys.argv[3] if len(sys.argv) > 3 else \
-        os.path.join(REPO, "BENCH_FAMILIES.json")
     with open(cur_p) as fh:
         cur = json.load(fh)
     out = {"sf": cur.get("sf"), "families": summarize(cur)}
@@ -85,12 +84,7 @@ def main() -> None:
         for f, rec in out["families"].items():
             a, b = rec.get("normalized"), pf[f].get("normalized")
             out["vs_prev"][f] = round(a / b, 3) if a and b else None
-    with open(out_p, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print(json.dumps({f: {"total_sec": r["total_sec"],
-                          "normalized": r["normalized"],
-                          "n": len(r["queries"])}
-                      for f, r in out["families"].items()}))
+    print(json.dumps(out, indent=1))
 
 
 if __name__ == "__main__":
