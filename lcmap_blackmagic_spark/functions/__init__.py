@@ -1,9 +1,7 @@
 from .dates import ordinal_from_date, date_from_ordinal, prediction_dates_array
-from .features import (spectral_slope, average_reflectance,
-                       standard_format_array, independent, dependent)
+from .features import average_reflectance, standard_format_array
 
 __all__ = [
     "ordinal_from_date", "date_from_ordinal", "prediction_dates_array",
-    "spectral_slope", "average_reflectance", "standard_format_array",
-    "independent", "dependent",
+    "average_reflectance", "standard_format_array",
 ]

@@ -22,6 +22,11 @@ def ordinal_from_date(col: Column | str) -> Column:
     return F.datediff(F.to_date(col), F.to_date(F.lit(_EPOCH))) + F.lit(1)
 
 
+def ordinal_sql(col: str) -> str:
+    """SQL text of ``ordinal_from_date`` over the column named ``col``."""
+    return f"datediff(to_date({col}), to_date('{_EPOCH}')) + 1"
+
+
 def date_from_ordinal(col: Column | str) -> Column:
     """Proleptic ordinal int → DateType.
 
@@ -31,7 +36,16 @@ def date_from_ordinal(col: Column | str) -> Column:
     return F.date_add(F.to_date(F.lit(_EPOCH)), (c - F.lit(1)).cast("int"))
 
 
-def prediction_dates_array(sday: Column | str, eday: Column | str,
+def prediction_dates_sql(sday: str, eday: str, month: int, day: int) -> str:
+    """SQL text of ``prediction_dates_array`` over the columns named
+    ``sday`` and ``eday``."""
+    s, e = f"to_date({sday})", f"to_date({eday})"
+    return (f"filter(transform(sequence(year({s}), year({e})), "
+            f"yr -> make_date(yr, {int(month)}, {int(day)})), "
+            f"dt -> dt >= {s} AND dt <= {e})")
+
+
+def prediction_dates_array(sday: str, eday: str,
                            month: int, day: int) -> Column:
     """Annual prediction dates within ``[sday, eday]`` as array<date>.
 
@@ -41,9 +55,4 @@ def prediction_dates_array(sday: Column | str, eday: Column | str,
     test_C_segaux.py:117-209 — including the boundary case where the
     month/day lands outside a partial first/last year).
     """
-    s = F.to_date(sday) if isinstance(sday, str) else F.to_date(sday)
-    e = F.to_date(eday) if isinstance(eday, str) else F.to_date(eday)
-    years = F.sequence(F.year(s), F.year(e))
-    candidates = F.transform(
-        years, lambda y: F.make_date(y, F.lit(month), F.lit(day)))
-    return F.filter(candidates, lambda d: (d >= s) & (d <= e))
+    return F.expr(prediction_dates_sql(sday, eday, month, day))

@@ -2,9 +2,13 @@
 
 Implements the training-matrix feature contract of the reference's
 ``segaux.py``: spectral slope (176-186), average reflectance (189-209),
-and the positional 69-slot standard format (248-275). The slot order is
+and the positional standard format (248-275). The slot order is
 contractual — band order bl, gr, ni, re, s1, s2, th, each contributing
 7 coefficients, rmse, then average reflectance.
+
+The fixed-shape expressions are written as SQL text and parsed once
+(``F.expr``): building the same trees Column by Column costs one py4j
+round trip per node, several thousand per request.
 """
 
 from __future__ import annotations
@@ -13,14 +17,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import AUX_FEATURES, BANDS
-from .dates import ordinal_from_date
+from .dates import ordinal_sql
 
 
-def spectral_slope(coef_col: Column | str) -> Column:
-    """First harmonic coefficient, or 0.0 when the segment has no model
-    (default segments carry empty/null coef arrays — segaux.py:176-186)."""
-    c = F.col(coef_col) if isinstance(coef_col, str) else coef_col
-    return F.coalesce(F.try_element_at(c, F.lit(1)), F.lit(0.0))
+def _slope_sql(band: str) -> str:
+    """First harmonic coefficient of ``band``, or 0.0 when the segment
+    has no model (default segments carry empty/null coef arrays —
+    segaux.py:176-186)."""
+    return f"coalesce(try_element_at({band}coef, 1), 0D)"
 
 
 def average_reflectance(df: DataFrame, date_col: str = "date") -> DataFrame:
@@ -29,46 +33,28 @@ def average_reflectance(df: DataFrame, date_col: str = "date") -> DataFrame:
 
     One ``withColumns`` call — a single projection, no per-band passes.
     """
-    ordinal = ordinal_from_date(date_col).cast("double")
+    ordinal = f"CAST({ordinal_sql(date_col)} AS DOUBLE)"
     return df.withColumns({
-        f"{b}ar": F.col(f"{b}int") + spectral_slope(f"{b}coef") * ordinal
+        f"{b}ar": F.expr(f"{b}int + {_slope_sql(b)} * {ordinal}")
         for b in BANDS
     })
 
 
-def _coef_slot(band: str, i: int) -> Column:
-    # Missing/short coef arrays read as 0.0 — default segments have no
-    # coefficients but still occupy matrix rows (segaux.py:176-186).
-    return F.coalesce(F.try_element_at(F.col(f"{band}coef"), F.lit(i + 1)),
-                      F.lit(0.0)).cast("double")
+def standard_format_array() -> Column:
+    """The 68 independent slots of the training vector as
+    array<double>, in contract order (segaux.py:248-275; the label,
+    slot 0 of the reference's 69, is a column of its own):
 
-
-def standard_format_array(include_label: bool = True) -> Column:
-    """The 69-slot (or 68 without label) training vector as
-    array<double>, in contract order (segaux.py:248-275):
-
-      nlcdtrn, aspect, posidex, slope, mpw, dem,
+      aspect, posidex, slope, mpw, dem,
       then per band b in (bl, gr, ni, re, s1, s2, th):
         b.coef[0..6], b.rmse, b.ar
     """
-    slots: list[Column] = []
-    if include_label:
-        slots.append(F.col("nlcdtrn").cast("double"))
-    slots += [F.col(c).cast("double") for c in AUX_FEATURES]
+    # Missing/short coef arrays and null elements read as 0.0 — default
+    # segments have no coefficients but still occupy matrix rows
+    # (segaux.py:176-186).
+    slots = [f"CAST({c} AS DOUBLE)" for c in AUX_FEATURES]
     for b in BANDS:
-        slots += [_coef_slot(b, i) for i in range(7)]
-        slots.append(F.coalesce(F.col(f"{b}rmse"), F.lit(0.0)).cast("double"))
-        slots.append(F.coalesce(F.col(f"{b}ar"), F.lit(0.0)).cast("double"))
-    return F.array(*slots)
-
-
-def independent(features_col: Column | str = "features") -> Column:
-    """Drop slot 0 (the label) — segaux.py:54-67."""
-    c = F.col(features_col) if isinstance(features_col, str) else features_col
-    return F.slice(c, 2, 68)
-
-
-def dependent(features_col: Column | str = "features") -> Column:
-    """Slot 0 as int8 label — segaux.py:70-83."""
-    c = F.col(features_col) if isinstance(features_col, str) else features_col
-    return F.element_at(c, 1).cast("tinyint")
+        slots += [f"coalesce(try_element_at({b}coef, {i}), 0D)"
+                  for i in range(1, 8)]
+        slots += [f"coalesce({b}rmse, 0D)", f"coalesce({b}ar, 0D)"]
+    return F.expr(f"array({', '.join(slots)})")

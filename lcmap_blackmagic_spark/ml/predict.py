@@ -3,9 +3,9 @@
 
 The reference documents why inference must be batched: the per-row
 worker method took ~970 s/chip (prediction.py:203-207). Here the model
-bytes are broadcast once and ``mapInPandas`` applies them per Arrow
-batch — no shuffle, no positional re-zip (the probability vector is
-computed in-row)."""
+bytes are broadcast once and an iterator Arrow UDF applies them per
+Arrow batch — no shuffle, no positional re-zip (the probability vector
+is computed in-row)."""
 
 from __future__ import annotations
 
@@ -13,7 +13,7 @@ import pickle
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -56,14 +56,37 @@ def _predict_matrix(model, X: np.ndarray) -> np.ndarray:
         z[:, ~model["seen"]] = -np.inf
         e = np.exp(z - z.max(axis=1, keepdims=True))
         return e / e.sum(axis=1, keepdims=True)
-    # nearest-centroid fallback: softmax over negative distances;
-    # classes absent at train time get probability 0.
+    # nearest-centroid fallback: softmax over negative distances, each
+    # row scaled by the spread of its own distances (a batch-wide
+    # spread would tie a row's output to its Arrow batch); classes
+    # absent at train time get probability 0.  One class at a time:
+    # no (rows × classes × features) temporary, and the same reduction
+    # as np.linalg.norm over the feature axis.
     c = model["centroids"]
-    d = np.linalg.norm(X[:, None, :] - c[None, :, :], axis=2)
-    z = -d / (d.std() + 1e-9)
+    d = np.empty((len(X), len(c)))
+    for k, ck in enumerate(c):
+        diff = X - ck
+        d[:, k] = np.sqrt(np.add.reduce(diff * diff, axis=1))
+    z = -d / (d.std(axis=1, keepdims=True) + 1e-9)
     z[:, ~model["seen"]] = -np.inf
     e = np.exp(z - z.max(axis=1, keepdims=True))
     return e / e.sum(axis=1, keepdims=True)
+
+
+def _score(model, feats: pa.ListArray) -> pa.ListArray:
+    """One Arrow batch of fixed-length feature lists → one list of
+    class probabilities per row, read and written as flat buffers."""
+    probs = np.empty((0, NUM_CLASSES), np.float32)
+    if len(feats):
+        width = np.diff(feats.offsets.to_numpy())
+        if (width != width[0]).any():
+            raise ValueError("feature arrays differ in length in a batch")
+        X = (feats.flatten().to_numpy(zero_copy_only=False)
+             .reshape(len(feats), width[0]).astype(np.float32))
+        probs = _predict_matrix(model, X).astype(np.float32)
+    offsets = np.arange(0, probs.size + 1, probs.shape[1], dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offsets),
+                                    pa.array(probs.ravel()))
 
 
 def predict_probabilities(df: DataFrame, model_bytes: bytes,
@@ -71,30 +94,25 @@ def predict_probabilities(df: DataFrame, model_bytes: bytes,
     """Append ``prob array<float>`` (NUM_CLASSES entries) to every row.
     Input rows must carry a fixed-length feature array.
 
-    Boundary shape (guide §4): an iterator pandas UDF on the feature
+    Boundary shape (guide §4): an iterator Arrow UDF on the feature
     column, not ``mapInPandas`` over whole rows — ONLY the feature
     arrays cross the JVM↔Python boundary; the key/date columns never
-    leave the JVM.  The old mapInPandas form shipped every column
-    both ways per batch (keys, 3 date strings) — pure serialization
-    overhead for columns the model never reads.  The model is still
-    decoded once per task (iterator form), batching still Arrow;
-    probabilities are identical (``_predict_matrix`` is row-wise)."""
-    from pyspark.sql.pandas.functions import pandas_udf
+    leave the JVM.  The model is decoded once per task (iterator
+    form); each batch's list column is read as one (rows × features)
+    matrix and the probabilities go back as one flat buffer, with no
+    per-row Python objects.  ``_predict_matrix`` is row-wise, so a
+    row's probabilities do not depend on how rows are batched."""
+    from pyspark.sql.functions import arrow_udf
 
     from ..session import ensure_worker_imports
     spark = df.sparkSession
     ensure_worker_imports(spark)
     bc = spark.sparkContext.broadcast(model_bytes)
 
-    @pandas_udf("array<float>")
-    def infer(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @arrow_udf("array<float>")
+    def infer(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         model = _load(bc.value)
         for feats in batches:
-            if len(feats) == 0:
-                yield pd.Series([], dtype=object)
-                continue
-            X = np.vstack(feats.to_numpy()).astype(np.float32)
-            probs = _predict_matrix(model, X).astype(np.float32)
-            yield pd.Series(list(probs))
+            yield _score(model, feats)
 
     return df.withColumn("prob", infer(F.col(features_col)))

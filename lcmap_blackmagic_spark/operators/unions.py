@@ -14,9 +14,15 @@ from pyspark.sql import functions as F
 from ..schemas import DEFAULT_DAY
 
 
+def is_default_sql(sday: str = "sday", eday: str = "eday") -> str:
+    """Default-segment predicate (segaux.py:142-146, prediction.py:169)
+    as SQL text."""
+    return f"{sday} = '{DEFAULT_DAY}' AND {eday} = '{DEFAULT_DAY}'"
+
+
 def is_default(sday: str = "sday", eday: str = "eday"):
     """Default-segment predicate (segaux.py:142-146, prediction.py:169)."""
-    return (F.col(sday) == DEFAULT_DAY) & (F.col(eday) == DEFAULT_DAY)
+    return F.expr(is_default_sql(sday, eday))
 
 
 def group_data(df: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -13,10 +13,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.dates import prediction_dates_array
+from ..functions.dates import prediction_dates_sql
 from ..functions.features import average_reflectance, standard_format_array
 from ..operators.joins import combine
-from ..operators.unions import is_default
+from ..operators.unions import is_default_sql
 from ..schemas import DEFAULT_DAY
 
 
@@ -24,10 +24,10 @@ def explode_prediction_dates(df: DataFrame, month: int, day: int) -> DataFrame:
     """Per-segment annual date explode (segaux.py:149-163, F4): default
     segments yield exactly one row with the sentinel date; real segments
     yield one row per in-interval annual date (F2)."""
-    dates = F.when(
-        is_default(), F.array(F.to_date(F.lit(DEFAULT_DAY)))
-    ).otherwise(prediction_dates_array("sday", "eday", month, day))
-    return df.withColumn("date", F.explode(dates))
+    dates = (f"CASE WHEN {is_default_sql()}"
+             f" THEN array(to_date('{DEFAULT_DAY}'))"
+             f" ELSE {prediction_dates_sql('sday', 'eday', month, day)} END")
+    return df.withColumn("date", F.explode(F.expr(dates)))
 
 
 def prediction_inputs(segments: DataFrame, aux: DataFrame,
@@ -44,8 +44,7 @@ def prediction_inputs(segments: DataFrame, aux: DataFrame,
     return with_ar.select(
         "cx", "cy", "px", "py", "sday", "eday",
         F.date_format("date", "yyyy-MM-dd").alias("pday"),
-        F.slice(standard_format_array(include_label=False), 1, 68)
-         .alias("independent"),
+        standard_format_array().alias("independent"),
     )
 
 

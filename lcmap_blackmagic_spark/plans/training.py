@@ -54,7 +54,6 @@ def training_data(segments: DataFrame, aux: DataFrame, date: str,
     out = with_ar.select(
         *(["cx", "cy", "px", "py"] if keep_keys else []),
         F.col("nlcdtrn").cast("tinyint").alias("label"),
-        F.slice(standard_format_array(include_label=True), 2, 68)
-         .alias("features"),
+        standard_format_array().alias("features"),
     )
     return out

@@ -212,7 +212,7 @@ def q_lcmap_predict_chip(spark, sf_dir):
     published number (~970 s/chip for the superseded per-row loop,
     blackmagic/blueprints/prediction.py:203-207; the batch path this
     engine implements is prediction.py:331-345).  Broadcast model +
-    Arrow-batched mapInPandas inference; defaults routed around the
+    Arrow-batched iterator-UDF inference; defaults routed around the
     model exactly as ``lcmap_prediction`` does at probe scale.
 
     FULLY ORACLE-CHECKED (round 11): md5-hash fixtures + the
@@ -220,9 +220,8 @@ def q_lcmap_predict_chip(spark, sf_dir):
     dates, exploded prediction dates, and the prob-vector arity —
     NUM_CLASSES for modeled rows, 0 for default segments) are
     closed-form in DuckDB (_sql_predict_chip).  The fit and the
-    mapInPandas inference still RUN — their probabilities are the
+    Arrow UDF inference still RUN — their probabilities are the
     ML boundary the oracle deliberately does not hash."""
-    from ..plans.prediction import prediction_pipeline
     from ..sources.fixtures import synth_aux_hash, synth_segments_hash
     # localCheckpoint the fixture frames: BOTH the training assembly
     # and prediction_inputs below consume segs+aux, and each

@@ -91,12 +91,12 @@ PIXELS = T.StructType(_key_fields + [
     T.StructField("mask", T.ArrayType(T.IntegerType()), True),
 ])
 
-# tile/model record (ceph.py:137-148; model bytes hex-encoded for JSON
-# parity — stored binary in parquet).
+# tile/model record (ceph.py:137-148): the model bytes are stored as
+# their hex string, the reference's JSON encoding.
 TILE = T.StructType([
     T.StructField("tx", T.LongType(), False),
     T.StructField("ty", T.LongType(), False),
-    T.StructField("model", T.BinaryType(), True),
+    T.StructField("model", T.StringType(), True),
 ])
 
 # predictions (ceph.py:225-247): prob is 9 class probabilities, or []

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from . import schemas
+
 # entity → partition columns (mirrors the URL scheme ceph.py:17-49);
 # rollup_partial is the streaming-rollup partial store, partitioned by
 # micro-batch id so a replayed batch overwrites ITS OWN partition
@@ -39,17 +41,39 @@ PARTITION_KEYS = {
     "cms_partial": ("batch_id",),
 }
 
+# entity → read schema, partition keys included as BIGINT.  A declared
+# schema skips the footer-inference job a bare parquet read runs; it
+# also reads a column the files lack as null, so
+# tests/test_storage_schemas.py pins every writer's footer to it.
+READ_SCHEMAS = {
+    "chip": schemas.CHIP,
+    "pixel": schemas.PIXELS,
+    "segment": schemas.SEGMENTS,
+    "aux": schemas.AUX,
+    "prediction": schemas.PREDICTIONS,
+    "tile": schemas.TILE,
+}
+
 
 def path(root: str, entity: str) -> str:
     return os.path.join(root, entity)
 
 
 def read(spark: SparkSession, root: str, entity: str) -> DataFrame:
-    """Whole-entity scan.  Partition discovery types the key
-    directories as INT; they are read as BIGINT instead, the type of
-    the chip/tile keys every plan compares them with
-    (``plans.training.chips_predicate``).  The type goes into the read
-    schema rather than a cast over the scan: with the cast, a
+    """Whole-entity scan with the entity's declared schema
+    (``READ_SCHEMAS``); other entities are read as ``_read_files``."""
+    if entity in READ_SCHEMAS:
+        return spark.read.schema(READ_SCHEMAS[entity]).parquet(
+            path(root, entity))
+    return _read_files(spark, root, entity)
+
+
+def _read_files(spark: SparkSession, root: str, entity: str) -> DataFrame:
+    """Scan with the schema inferred from the files, except that the
+    partition keys, which partition discovery types as INT, are read
+    as BIGINT: the type of the chip/tile keys every plan compares them
+    with (``plans.training.chips_predicate``).  The type goes into the
+    read schema rather than a cast over the scan: with the cast, a
     /prediction request measured about 1 s slower (4-core host)."""
     p = path(root, entity)
     df = spark.read.parquet(p)
@@ -232,7 +256,9 @@ def compact_partitions(spark: SparkSession, root: str,
     keys = list(PARTITION_KEYS[entity])
     tmp = base + "__compacting"
     backup = base + "__pre_compact"
-    (read(spark, root, entity)
+    # the files as they are: a declared read schema would drop any
+    # column it does not name
+    (_read_files(spark, root, entity)
      .repartition(*[F.col(k) for k in keys])
      .sortWithinPartitions(*keys)
      .write.mode("overwrite")

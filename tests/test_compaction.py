@@ -8,14 +8,19 @@ from lcmap_blackmagic_spark import storage
 
 
 def test_compact_collapses_files_and_preserves_rows(spark, tmp_path):
+    from functools import reduce
+
+    from lcmap_blackmagic_spark.sources.fixtures import synth_segments
+
     root = str(tmp_path)
     base = storage.path(root, "segment")
-    # simulate 5 micro-batch appends: each adds a file per partition
+    # simulate 5 micro-batch appends: each adds a file per partition.
+    # The rows carry the declared segment schema, which storage.read
+    # reads them with.
     for batch in range(5):
-        df = spark.createDataFrame(
-            [(cx, cy, batch * 100 + i, float(i))
-             for cx in (0, 3000) for cy in (0, 3000) for i in range(10)],
-            "cx long, cy long, seq long, v double")
+        df = reduce(lambda a, b: a.unionByName(b), [
+            synth_segments(spark, cx=cx, cy=cy, side=3, seed=batch)
+            for cx in (0, 3000) for cy in (0, 3000)])
         (df.write.mode("append")
            .partitionBy("cx", "cy").parquet(base))
 
@@ -31,7 +36,9 @@ def test_compact_collapses_files_and_preserves_rows(spark, tmp_path):
 
     # partition pruning still works on the compacted layout
     pruned = storage.read_partition(spark, root, "segment", cx=0, cy=3000)
-    assert pruned.count() == 50
+    want = sorted(r for r in before_rows       # keys are read last
+                  if (r[-2], r[-1]) == (0, 3000))
+    assert want and sorted(tuple(r) for r in pruned.collect()) == want
 
 
 def test_zorder_compaction_prunes_on_both_columns(spark):
