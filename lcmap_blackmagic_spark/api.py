@@ -9,15 +9,19 @@ test contract at test_A_segment.py:159-194).
 
 Here a "request" is a job: validation raises ``ValidationError``
 (→ 400), stages run in order and wrap failures in ``StageError``
-(→ 500, stage named). No-partial-writes holds structurally: every
-stage before ``save`` only BUILDS a lazy plan, and each entity write
-in the save stage is one dynamic-partition-overwrite job that Spark
-commits atomically via the output committer. A save stage touching
-several entities is per-entity atomic + idempotent-on-retry (the
-same partitions are rewritten), with side entities committed before
-the authoritative one so a mid-stage failure never publishes an
-authoritative partition whose side outputs are stale. The reference
-needed explicit deletes + ordered puts for the same guarantee.
+(→ 500, stage named). No-partial-writes holds structurally: the
+stages before ``save`` may stage request-scoped data (a plan that
+several writes or a driver decision read is persisted once —
+``_staging``), but they write nothing under ``storage_root``, and
+everything they staged is released when the request ends, on success
+or failure. Each entity write in the save stage is one dynamic-
+partition-overwrite job that Spark commits atomically via the output
+committer. A save stage touching several entities is per-entity
+atomic + idempotent-on-retry (the same partitions are rewritten),
+with side entities committed before the authoritative one so a
+mid-stage failure never publishes an authoritative partition whose
+side outputs are stale. The reference needed explicit deletes +
+ordered puts for the same guarantee.
 
 ``test_exception`` reproduces the reference's fault-injection
 parameter (segment.py:151-153): name a stage to force it to raise.
@@ -26,7 +30,8 @@ parameter (segment.py:151-153): name a stage to force it to raise.
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Any
 
 RESPONSE_OK = 200
@@ -132,6 +137,27 @@ def run_stages(ctx: Any, stages: list[tuple[str, Callable[[Any], Any]]],
     return ctx
 
 
+@contextmanager
+def _staging() -> Iterator[Callable]:
+    """Request-scoped staging: yields ``stage(df)``, which persists
+    ``df`` and returns it.  Every staged plan is unpersisted on exit,
+    on success and on every failure path, so a request leaves no
+    cached blocks in the session.  ``persist`` keeps lineage: a lost
+    executor's blocks are recomputed rather than failing the request
+    (``localCheckpoint`` would not)."""
+    staged = []
+
+    def stage(df):
+        staged.append(df.persist())
+        return staged[-1]
+
+    try:
+        yield stage
+    finally:
+        for df in staged:
+            df.unpersist()
+
+
 def run_segment_job(spark, params: dict, storage_root: str,
                     ard=None, side: int = 10, detector=None,
                     test_exception: str | None = None) -> dict:
@@ -140,7 +166,12 @@ def run_segment_job(spark, params: dict, storage_root: str,
     segment partitions, dynamic overwrite). ``ard`` defaults to the
     chip's synthetic fixture; pass a real scan in production.
     ``detector`` swaps the science core (default stub; pass
-    ``plans.pyccd.pyccd_detector`` where lcmap-pyccd is installed)."""
+    ``plans.pyccd.pyccd_detector`` where lcmap-pyccd is installed).
+
+    Like the reference, the chip is assembled once and detected once:
+    ``ts`` (read by the ``nodata`` decision and the pixel write) and
+    ``detections`` (read by the chip and segment writes) are staged
+    for the request; the first action on each materializes it."""
     from . import storage
     from .plans.segment import (chip_record, detect, pixel_records,
                                 pixel_timeseries, stub_detector)
@@ -165,7 +196,7 @@ def run_segment_job(spark, params: dict, storage_root: str,
         return {"ard": a}
 
     def timeseries(ctx):
-        ctx["ts"] = pixel_timeseries(ctx["ard"], side=side)
+        ctx["ts"] = stage(pixel_timeseries(ctx["ard"], side=side))
         return ctx
 
     def nodata(ctx):
@@ -176,11 +207,11 @@ def run_segment_job(spark, params: dict, storage_root: str,
         return ctx
 
     def detection(ctx):
-        ctx["detections"] = detect(ctx["ts"], detector=det).observe(
+        ctx["detections"] = stage(detect(ctx["ts"], detector=det).observe(
             obs,
             F.count(F.lit(1)).alias("n_detections"),
             F.min("sday").alias("first_sday"),
-            F.max("eday").alias("last_eday"))
+            F.max("eday").alias("last_eday")))
         return ctx
 
     def save(ctx):
@@ -199,13 +230,14 @@ def run_segment_job(spark, params: dict, storage_root: str,
         return ctx
 
     try:
-        run_stages(None, [("load", load), ("timeseries", timeseries),
-                          ("nodata", nodata), ("detection", detection),
-                          ("save", save)], test_exception)
+        with _staging() as stage:
+            run_stages(None, [("load", load), ("timeseries", timeseries),
+                              ("nodata", nodata), ("detection", detection),
+                              ("save", save)], test_exception)
     except StageError as e:
         return respond(p, e)
     out = respond(p)
-    out["metrics"] = dict(obs.get)  # populated by the save action
+    out["metrics"] = dict(obs.get)  # populated by the first write
     return out
 
 

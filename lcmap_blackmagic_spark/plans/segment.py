@@ -332,6 +332,9 @@ def segment_pipeline(ard: DataFrame, side: int = 100,
                      detector: Callable = stub_detector) -> DataFrame:
     """End-to-end /segment: assembly → detection. Returns the 38-col
     segments DataFrame (callers persist via storage.overwrite_partitions
-    and derive chip/pixel records)."""
+    and derive chip/pixel records).  The plan is lazy: a caller that
+    derives several sinks from it should stage it once (persist, then
+    unpersist when done, as ``api.run_segment_job`` does), or each
+    sink re-runs the assembly shuffle and the detector."""
     ts = pixel_timeseries(ard, side)
     return detect(ts, detector)

@@ -98,6 +98,78 @@ def test_segment_job_failure_leaves_no_partial_writes(spark, tmp_path,
         assert not os.path.exists(os.path.join(root, entity))
 
 
+# ------------------------------------------ request-scoped staging --
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+# None = a successful request; a stage name = its test_exception;
+# segment_write = the segment entity's write raises inside save
+RELEASE_CASES = [None, "timeseries", "nodata", "detection", "save",
+                 "segment_write"]
+
+
+@pytest.mark.parametrize("fail", RELEASE_CASES)
+def test_segment_job_releases_staged_data(spark, tmp_path, monkeypatch,
+                                          fail):
+    """The request's staged ``ts`` and ``detections`` are released on
+    success and on every failure path, including a failure inside the
+    save stage after the side entities committed.  Each case runs its
+    own chip, so a block one case leaked cannot hide another's."""
+    root = str(tmp_path / "store")
+    params = GOOD_SEG | {"cx": 100 + 3000 * RELEASE_CASES.index(fail)}
+    test_exception = fail
+    if fail == "segment_write":
+        test_exception = None
+        real = storage.overwrite_partitions
+
+        def overwrite(df, root, entity, *a, **kw):
+            if entity == "segment":
+                raise RuntimeError("injected segment write failure")
+            return real(df, root, entity, *a, **kw)
+        monkeypatch.setattr(storage, "overwrite_partitions", overwrite)
+
+    before = _persistent_rdd_ids(spark)
+    r = run_segment_job(spark, params, root, side=5,
+                        test_exception=test_exception)
+    assert _persistent_rdd_ids(spark) == before
+    if fail is None:
+        assert r["status"] == 200
+    else:
+        stage = "save" if fail == "segment_write" else fail
+        assert r["status"] == 500 and repr(stage) in r["message"]
+        # side entities commit first; the authoritative one never did
+        assert not os.path.exists(os.path.join(root, "segment"))
+
+
+def test_segment_job_detects_each_pixel_once(spark, tmp_path):
+    """The chip and segment writes share one detection pass (the
+    reference's segment.py:253-264 saves all three entities from one
+    result), and the request runs a bounded number of Spark jobs."""
+    from lcmap_blackmagic_spark.plans.segment import stub_detector
+    sc = spark.sparkContext
+    calls = sc.accumulator(0)
+
+    def counting_detector(dates, bands, qas):
+        calls.add(1)
+        return stub_detector(dates, bands, qas)
+
+    group = "segment-job-census"
+    sc.setJobGroup(group, "run_segment_job job census")
+    try:
+        r = run_segment_job(spark, GOOD_SEG, str(tmp_path / "store"),
+                            side=5, detector=counting_detector)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert r["status"] == 200
+    assert r["metrics"]["n_detections"] == 25
+    assert calls.value == 25          # one detector call per pixel
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 12
+
+
 def test_tile_then_prediction_jobs(spark, tmp_path):
     """The /tile → /prediction composition: model persisted as a hex
     1-row tile record, then loaded, broadcast, and applied."""
