@@ -30,13 +30,21 @@ deliberately NOT applied to the checked output; the raw estimator plus
 tests/test_ext4.py) can apply it. Reference parity: the reference has
 no sketches — this is part of the north-star analytics surface
 (SURVEY.md §2.9).
+
+The Bloom filter at the end of the module is the package's one
+membership construction, on the same md5-48 hash: the storage
+sidecars (per file, per snapshot commit dir) and the decontamination
+word store (llm/bloomfilter.py) all build and probe through it.
 """
 
 from __future__ import annotations
 
+import base64
+import hashlib
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 H48 = 2 ** 48  # 12 hex digits of md5 as an integer
@@ -391,3 +399,110 @@ def k_smallest(dist: DataFrame, groups: list, h: str = "h",
                         + F.row_number().over(win))
             .filter(F.col("rn") <= k)
             .drop("_bkt", "_before"))
+
+
+# ------------------------------------------------------ Bloom filter ----
+# A key's BLOOM_K positions are md5-48 hashes of "i:" + CAST(key AS
+# STRING), mod m: the Spark form builds, the hashlib form probes on
+# the driver, and DuckDB replays it in SQL (registry/dedup.py's
+# oracle), so membership — false positives included — is a pure
+# function any engine reproduces.  A bitset is uint64 words: bit p is
+# bit p & 63 of word p >> 6, i.e. bit p & 7 of little-endian byte
+# p >> 3.
+
+BLOOM_K = 7   # hash functions; with 10 bits/key, fpp ~ 0.8%
+
+# Spark storage types whose CAST(... AS STRING) is Python's str() of
+# an int probe.
+_BLOOM_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
+
+
+def bloom_positions(key: Column, m: int) -> Column:
+    """The key's BLOOM_K bit positions, an array<bigint> column."""
+    return F.array(*[
+        F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}:"),
+                                          key.cast("string"))),
+                           1, 12), 16, 10).cast("bigint") % F.lit(m)
+        for i in range(BLOOM_K)])
+
+
+def bloom_positions_of(text: str, m: int) -> list[int]:
+    """``bloom_positions`` of a key already rendered as Spark's
+    CAST(key AS STRING), computed on the driver."""
+    return [int(hashlib.md5(f"{i}:{text}".encode()).hexdigest()[:12],
+                16) % m
+            for i in range(BLOOM_K)]
+
+
+def bloom_words(df: DataFrame, key: Column, m: int,
+                *by: str) -> DataFrame:
+    """Fold ``key`` into the non-zero 64-bit words of an m-bit bitset
+    per ``by`` group: rows (by..., w, bits), one bit_or aggregate
+    combined map-side, at most m/64 rows per group.  Null keys set no
+    bit (no equality probe can match them)."""
+    return (df.filter(key.isNotNull())
+            .select(*by, F.explode(bloom_positions(key, m)).alias("pos"))
+            .groupBy(*by, F.shiftright(F.col("pos"), 6).alias("w"))
+            .agg(F.bit_or(F.expr(
+                "shiftleft(CAST(1 AS BIGINT), pos % 64)")).alias("bits")))
+
+
+def bloom_bitsets(words: DataFrame, m: int, by: str | None = None) -> dict:
+    """Collect (by, w, bits) word rows into uint64 bitsets keyed by
+    the ``by`` value — the driver receives at most m/64 rows per
+    group, never the position stream.  Without ``by`` the one bitset
+    is under ``None`` (all zeros for an empty ``words``)."""
+    n_words = (m + 63) // 64
+    out = {} if by else {None: np.zeros(n_words, dtype="<u8")}
+    for row in words.collect():
+        g = row[by] if by else None
+        if g not in out:
+            out[g] = np.zeros(n_words, dtype="<u8")
+        out[g][row["w"]] = row["bits"] & 0xFFFFFFFFFFFFFFFF
+    return out
+
+
+def bloom_encode(bits: np.ndarray, m: int) -> str:
+    """A bitset's sidecar form: base64 of its first ceil(m/8) bytes."""
+    return base64.b64encode(bits.tobytes()[:(m + 7) // 8]).decode("ascii")
+
+
+def bloom_decode(b64: str) -> np.ndarray:
+    """Inverse of ``bloom_encode``."""
+    raw = base64.b64decode(b64)
+    return np.frombuffer(raw + bytes(-len(raw) % 8), dtype="<u8")
+
+
+def bloom_test(bits: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    """Per row of an (n, BLOOM_K) int64 position array: True iff
+    every position's bit is set."""
+    w = bits[pos >> 6]
+    return ((w >> (pos & 63).astype(np.uint64)) & np.uint64(1)).all(axis=1)
+
+
+def bloom_may_contain(bloom: dict, value) -> bool:
+    """Probe a sidecar filter ``{"m", "k", "type", "bits"}`` (bits
+    decoded) for ``key = value``: False ONLY when it proves the value
+    absent.
+
+    The build hashed Spark's CAST(key AS STRING), so a probe prunes
+    only when its Python rendering provably equals that string, which
+    holds only when the probe's type matches the recorded key type
+    (int ↔ integral, str ↔ string, bool ↔ boolean).  A cross-typed
+    probe (int 107 against a double key, which Spark renders
+    "107.0"), any other probe type, and a filter with no recorded type
+    or another k never prune: the caller's equality filter still
+    runs, so the answer stays right."""
+    ctype = bloom.get("type")
+    if isinstance(value, bool):
+        text = ("true" if value else "false") if ctype == "boolean" else None
+    elif isinstance(value, int):
+        text = str(value) if ctype in _BLOOM_INT_TYPES else None
+    elif isinstance(value, str):
+        text = value if ctype == "string" else None
+    else:
+        text = None
+    if text is None or bloom.get("k") != BLOOM_K:
+        return True
+    pos = np.array([bloom_positions_of(text, bloom["m"])])
+    return bool(bloom_test(bloom["bits"], pos)[0])

@@ -873,7 +873,6 @@ PQ_REFINE = 12  # exact-rerank shortlist size (4 × IVX_K)
 
 
 def _ivfpq_topk(spark, sf_dir, *, source_fn=None,
-                staging_key: str = "ivfpq_arr",
                 residual: bool = False, refine: int = 0,
                 probe: int | None = None,
                 _share_out: dict | None = None):
@@ -918,9 +917,7 @@ def _ivfpq_topk(spark, sf_dir, *, source_fn=None,
 
     ``source_fn(spark, sf_dir) -> DataFrame[(vec_id, qa)]`` swaps the
     corpus (already integer-quantized) — used by the clustered-
-    fixture recall entries; ``staging_key`` is retained for call-site
-    stability (the r14 parquet staging became a lazy localCheckpoint
-    in r15 — same materialize-once reuse, zero blocking jobs).
+    fixture recall entries.
 
     ``refine=R`` adds the third standard accuracy knob (FAISS
     IndexRefine): keep the top R candidates per query by ADC, then
@@ -1286,8 +1283,7 @@ def q_llm_ann_recall(spark, sf_dir):
     return recall_of(spark, sf_dir)
 
 
-def recall_of(spark, sf_dir, *, source_fn=None,
-              staging_key: str = "ivfpq_arr", residual: bool = False,
+def recall_of(spark, sf_dir, *, source_fn=None, residual: bool = False,
               refine: int = 0, probe: int | None = None):
     """Recall@k harness shared by the uniform-fixture entry
     (``llm_ann_recall``), the clustered-fixture pin
@@ -1307,8 +1303,8 @@ def recall_of(spark, sf_dir, *, source_fn=None,
     # their seeds) rides this single materialization since r15.
     share: dict = {}
     pq = _ivfpq_topk(spark, sf_dir, source_fn=source_fn,
-                     staging_key=staging_key, residual=residual,
-                     refine=refine, probe=probe, _share_out=share) \
+                     residual=residual, refine=refine, probe=probe,
+                     _share_out=share) \
         .select("qid", "nid").localCheckpoint()
     # the helper checkpointed the quantized table and fit the coarse
     # cells; reuse BOTH for the ground-truth corpus assignment (the
@@ -1449,8 +1445,7 @@ def q_llm_ann_recall_clustered(spark, sf_dir):
     is dominated by real neighbor structure, not tie-break luck.
     See tests/test_ann_clustered.py for the pinned uniform-vs-
     clustered gap."""
-    return recall_of(spark, sf_dir, source_fn=clustered_embeddings,
-                     staging_key="ivfpq_clu_arr")
+    return recall_of(spark, sf_dir, source_fn=clustered_embeddings)
 
 
 def q_llm_ann_recall_resid(spark, sf_dir):
@@ -1460,7 +1455,7 @@ def q_llm_ann_recall_resid(spark, sf_dir):
     never rank worse than quantizing x (the codebooks describe a
     cell's spread instead of the whole space)."""
     return recall_of(spark, sf_dir, source_fn=clustered_embeddings,
-                     staging_key="ivfpq_clu_arr", residual=True)
+                     residual=True)
 
 
 def q_llm_ann_recall_refine(spark, sf_dir):
@@ -1482,7 +1477,7 @@ def q_llm_ann_recall_refine(spark, sf_dir):
     misses need more probes.  Per query the exact work is PQ_REFINE
     distances, not |corpus|."""
     return recall_of(spark, sf_dir, source_fn=clustered_embeddings,
-                     staging_key="ivfpq_clu_arr", refine=PQ_REFINE)
+                     refine=PQ_REFINE)
 
 
 def q_llm_ann_recall_probe4(spark, sf_dir):
@@ -1498,8 +1493,7 @@ def q_llm_ann_recall_probe4(spark, sf_dir):
     candidate join fans out to probe/IVX_CELLS of the corpus per
     query."""
     return recall_of(spark, sf_dir, source_fn=clustered_embeddings,
-                     staging_key="ivfpq_clu_arr", refine=PQ_REFINE,
-                     probe=4)
+                     refine=PQ_REFINE, probe=4)
 
 
 def q_llm_ann_ivfpq_resid(spark, sf_dir):

@@ -29,17 +29,19 @@ correctness gate:
   through a BROADCAST BLOOM FILTER — the at-scale form of the
   5-gram semi-join (``llm_decontaminate``): the benchmark's grams
   fold into an m-bit bitset (executor-side bit_or word partials, the
-  storage-layer bloom construction), the bitset broadcasts to every
-  worker (kilobytes, not the gram list), and each corpus gram tests
-  k md5 positions in one Arrow-vectorized numpy pass.  Because the
-  positions are deterministic md5, DuckDB replays the EXACT
-  membership decision — including any false positives — so the whole
-  filter (a probabilistic structure!) carries a bit-exact oracle.
+  operators/sketches.py bloom construction), the bitset broadcasts
+  to every worker (kilobytes, not the gram list), and each corpus
+  gram tests k md5 positions in one Arrow-vectorized numpy pass.
+  Because the positions are deterministic md5, DuckDB replays the
+  EXACT membership decision — including any false positives — so the
+  whole filter (a probabilistic structure!) carries a bit-exact
+  oracle.
 
 Reference anchor: nothing in lcmap-blackmagic — the snapshot store
 and the LLM curation surface are the engine's own first-class
-additions (brief §LLM-ops); the bloom construction mirrors
-storage.write_with_bloom (file skipping) re-aimed at membership
+additions (brief §LLM-ops); the bloom filter is the one
+operators/sketches.py construction the storage sidecars (file
+skipping) also build and probe through, here aimed at membership
 filtering.
 
 Eighteenth extension wave (round 12) — table-format RESTORE, the
@@ -716,7 +718,9 @@ FROM documents GROUP BY source ORDER BY source
 
 # ------------------------------------------------ bloom decontam ----
 
-from ..llm.bloomfilter import BLOOM_K, BLOOM_M, DECON_N  # noqa: E402
+from ..llm.bloomfilter import BLOOM_M, DECON_N  # noqa: E402
+from ..operators.sketches import (BLOOM_K, bloom_bitsets,  # noqa: E402
+                                  bloom_words)
 
 
 def q_llm_bloom_decontam(spark, sf_dir):
@@ -735,15 +739,15 @@ def q_llm_bloom_decontam(spark, sf_dir):
     a multi-TB gram table — the standard production decontam trade
     (deterministic FPR instead of an exact join; the FPR is part of
     the checked semantics)."""
-    from ..llm.bloomfilter import bits_from_words, bloom_words, \
-         doc_hit_flags
+    from ..llm.bloomfilter import doc_hit_flags
     from ..llm.dedup import shingles
 
     d = _t(spark, sf_dir, "documents")
     bench = (d.filter(F.col("source") == "src0")
              .select(F.explode(shingles("text", DECON_N)).alias("g"))
              .distinct())
-    bits = bits_from_words(bloom_words(bench).collect())
+    bits = bloom_bitsets(bloom_words(bench, F.col("g"), BLOOM_M),
+                         BLOOM_M)[None]
     corpus = d.filter(F.col("source") != "src0")
     # per-doc flag straight from the gram probe's aggregate, then an
     # UNFORCED left join back (AQE picks the strategy) — never a

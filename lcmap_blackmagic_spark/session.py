@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the engine.
 
-Local test shape: one JVM, ``local[$SPARK_GRAFT_CPUS]``. Cluster shape:
-same conf minus master/driver-memory, which come from spark-submit.
+Local test shape: one JVM, ``local[$SPARK_GRAFT_CPUS]`` (default: the
+cores this process may run on). Cluster shape: same conf minus
+master/driver-memory, which come from spark-submit.
 """
 
 from __future__ import annotations
@@ -16,7 +17,8 @@ from . import ENGINE_CONF
 def get_session(app_name: str = "lcmap-blackmagic-spark",
                 shuffle_partitions: int | None = None,
                 extra_conf: dict | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -70,13 +72,3 @@ def ensure_worker_imports(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
     spark.conf.set(flag, "true")
 
-
-def tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver-provided synthetic tables as DataFrames —
-    through the registry loader, so the events table's ts encoding
-    (which has varied across fixture generations) is normalized to a
-    proper TimestampType however it was written."""
-    from .registry import _t
-    names = ["region", "nation", "customer", "supplier", "part", "orders",
-             "lineitem", "events", "documents", "embeddings"]
-    return {n: _t(spark, sf_dir, n) for n in names}

@@ -23,6 +23,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from . import schemas
+from .operators.sketches import (BLOOM_K, bloom_bitsets, bloom_decode,
+                                 bloom_encode, bloom_may_contain,
+                                 bloom_words)
 
 # entity → partition columns (mirrors the URL scheme ceph.py:17-49);
 # rollup_partial is the streaming-rollup partial store, partitioned by
@@ -271,26 +274,35 @@ def compact_partitions(spark: SparkSession, root: str,
 
 
 # ------------------------------------------ bloom file skipping ----
+# Both sidecars — one filter per file (write_with_bloom) and one per
+# snapshot commit dir (_snap_commit_bloom) — are
+# operators/sketches.py's Bloom construction: md5 positions, the
+# bitset packed executor-side (bit_or word partials), each filter's
+# key type recorded so a cross-typed probe never prunes.  Blooms only
+# skip files; the reader's equality filter still answers.
 
 BLOOM_SIDECAR = "_blooms.json"
-BLOOM_K = 7  # hash functions; with m = 10 bits/key, fpp ~ 0.8%
+_BLOOM_BITS_PER_KEY = 10   # with BLOOM_K = 7, fpp ~ 0.8%
+
+# Hard cap on one filter's size (bits), for both sidecars.  The build
+# collects a filter's non-zero 64-bit words on the driver (plus the
+# m/8-byte bitset), so an UNCAPPED m = 10 bits/key means a 10^9-row
+# write materializes ~1.2 GB per filter driver-side.  2^27 bits =
+# 16 MB bitset / ~2M words max per filter — bounded regardless of
+# write size.  Past the cap the effective bits/key drops below 10 and
+# the false-positive rate degrades toward 1 (the filter saturates):
+# pruning weakens gracefully to "never prunes", it never turns wrong.
+SNAP_BLOOM_MAX_BITS = 1 << 27
 
 
-def _bloom_positions(key: F.Column, m: int):
-    """The K deterministic bit positions of a key: independent
-    md5-derived 48-bit hashes mod m (engine-portable, no JVM-only
-    hash so a non-Spark writer could produce identical sidecars)."""
-    return F.array(*[
-        (F.conv(F.substring(F.md5(F.concat(F.lit(f"{i}:"),
-                                           key.cast("string"))),
-                            1, 12), 16, 10).cast("bigint")
-         % F.lit(m)).cast("int")
-        for i in range(BLOOM_K)])
+def _bloom_m(n_keys: int, n_filters: int) -> int:
+    """Bits per filter for ``n_keys`` spread over ``n_filters``."""
+    return max(64, min(int(_BLOOM_BITS_PER_KEY * n_keys / n_filters),
+                       SNAP_BLOOM_MAX_BITS))
 
 
 def write_with_bloom(df: DataFrame, out_dir: str, key_col: str,
-                     n_files: int = 8,
-                     bits_per_key: int = 10) -> int:
+                     n_files: int = 8) -> int:
     """Point-lookup file skipping for a HIGH-CARDINALITY key that the
     physical layout is NOT sorted by (parquet min/max footer stats
     prune range predicates on the sort/z-order columns; they are
@@ -300,44 +312,26 @@ def write_with_bloom(df: DataFrame, out_dir: str, key_col: str,
     filter PER FILE as a sidecar (`_blooms.json`): a point lookup
     tests k bits per sidecar and reads only matching files — at
     100 TB that turns an all-files scan into ~1 file + a false
-    positive rate of ~0.8% (k=7, 10 bits/key), the same file-skipping
-    contract as Parquet's optional bloom_filter column metadata or
-    Delta's BLOOMFILTER index, expressed engine-side so ANY layout
-    gets it. The bloom build is one distributed pass over the written
-    files with the bitset packed EXECUTOR-SIDE (positions fold into
-    64-bit words via bit_or partial aggregation), so the driver
-    collects exactly m/8 bytes per file — never the O(k·rows)
-    position stream. Returns the file count."""
-    import base64
+    positive rate of ~0.8%, the same file-skipping contract as
+    Parquet's optional bloom_filter column metadata or Delta's
+    BLOOMFILTER index, expressed engine-side so ANY layout gets it.
+    The build is one distributed pass over the written files; the
+    driver collects at most m/64 words per file, m capped at
+    ``SNAP_BLOOM_MAX_BITS``. Returns the file count."""
     import json
 
     spark = df.sparkSession
     n_rows = df.count()
     (df.repartition(n_files, F.col(key_col))
        .write.mode("overwrite").parquet(out_dir))
-    m = max(64, int(bits_per_key * n_rows / n_files))
-    words = (spark.read.parquet(out_dir)
-             .select(F.input_file_name().alias("f"),
-                     F.explode(_bloom_positions(F.col(key_col), m))
-                     .alias("pos"))
-             .groupBy("f", F.shiftright(F.col("pos"), 6).alias("w"))
-             .agg(F.bit_or(F.expr(
-                 "shiftleft(CAST(1 AS BIGINT), pos % 64)")).alias("bits"))
-             .collect())
-    n_words = (m + 63) // 64
-    per_file: dict[str, list[int]] = {}
-    for row in words:
-        per_file.setdefault(os.path.basename(row["f"]),
-                            [0] * n_words)[row["w"]] = row["bits"]
-    blooms = {}
-    for name, ws in per_file.items():
-        bits = bytearray((m + 7) // 8)
-        for wi, word in enumerate(ws):
-            bits[wi * 8:wi * 8 + 8] = (word & 0xFFFFFFFFFFFFFFFF
-                                       ).to_bytes(8, "little")
-        blooms[name] = base64.b64encode(
-            bytes(bits[: (m + 7) // 8])).decode("ascii")
+    back = spark.read.parquet(out_dir)
+    m = _bloom_m(n_rows, n_files)
+    words = bloom_words(back.withColumn("f", F.input_file_name()),
+                        F.col(key_col), m, "f")
+    blooms = {os.path.basename(f): bloom_encode(bits, m)
+              for f, bits in bloom_bitsets(words, m, "f").items()}
     sidecar = {"key_col": key_col, "m": m, "k": BLOOM_K,
+               "type": back.schema[key_col].dataType.simpleString(),
                "files": blooms}
     with open(os.path.join(out_dir, BLOOM_SIDECAR), "w") as fh:
         json.dump(sidecar, fh)
@@ -346,33 +340,25 @@ def write_with_bloom(df: DataFrame, out_dir: str, key_col: str,
 
 def read_bloom_pruned(spark: SparkSession, out_dir: str,
                       value) -> tuple[DataFrame, int, int]:
-    """Point lookup through the bloom sidecar: test the key's k bit
-    positions against each file's filter and scan ONLY the files
-    that might contain it. Returns (df, files_read, files_total);
-    the df still carries the exact equality filter — blooms only
-    skip, never answer. An empty candidate set returns an empty
-    DataFrame with the dataset's schema (driver-side planning cost
-    is one tiny JSON, no file footers touched)."""
-    import base64
-    import hashlib
+    """Point lookup through the bloom sidecar: probe each file's
+    filter (``bloom_may_contain``) and scan ONLY the files that might
+    contain ``value``. Returns (df, files_read, files_total); the df
+    still carries the exact equality filter — blooms only skip, never
+    answer. An empty candidate set returns an empty DataFrame with
+    the dataset's schema (driver-side planning cost is one tiny JSON,
+    no file footers touched)."""
     import json
 
     with open(os.path.join(out_dir, BLOOM_SIDECAR)) as fh:
         sc = json.load(fh)
-    m, k, key_col = sc["m"], sc["k"], sc["key_col"]
-    positions = [int(hashlib.md5(f"{i}:{value}".encode())
-                     .hexdigest()[:12], 16) % m for i in range(k)]
-    keep = []
-    for name, b64 in sc["files"].items():
-        bits = base64.b64decode(b64)
-        if all(bits[p >> 3] & (1 << (p & 7)) for p in positions):
-            keep.append(os.path.join(out_dir, name))
-    total = len(sc["files"])
+    files = sc.pop("files")
+    keep = [os.path.join(out_dir, name) for name, b64 in files.items()
+            if bloom_may_contain({**sc, "bits": bloom_decode(b64)}, value)]
     if not keep:
         empty = spark.read.parquet(out_dir).limit(0)
-        return empty, 0, total
-    df = spark.read.parquet(*keep).filter(F.col(key_col) == value)
-    return df, len(keep), total
+        return empty, 0, len(files)
+    df = spark.read.parquet(*keep).filter(F.col(sc["key_col"]) == value)
+    return df, len(keep), len(files)
 
 
 # ---- versioned snapshot store (manifest-committed time travel) -----
@@ -778,89 +764,43 @@ SNAP_IN_PRUNE_CAP = 1024
 
 SNAP_BLOOM = "_bloom.json"
 
-# Hard cap on a snapshot bloom sidecar's bitset size (bits).  The
-# build collects the bitset's non-zero 64-bit words on the driver
-# (plus the m/8-byte bytearray), so an UNCAPPED m = 10 bits/row
-# means a 10^9-row bulk-load commit materializes ~1.2 GB per bloom
-# column driver-side.  2^27 bits = 16 MB bitset / ~2M words max per
-# column — bounded regardless of commit size.  Past the cap the
-# effective bits/key drops below 10 and the false-positive rate
-# degrades toward 1 (the filter saturates): pruning weakens
-# gracefully to "never prunes", it never turns wrong.
-SNAP_BLOOM_MAX_BITS = 1 << 27
-
-# Spark storage types a probe Python value may prune against: the
-# write side hashes Spark's CAST(col AS STRING), which provably
-# equals Python's str() only when the probe's type matches the
-# column's storage family (an int probe against a double column
-# renders "107" vs the sidecar's "107.0" — the bloom would 'prove'
-# absence of a value that IS present).  Anything else → no prune.
-_SNAP_BLOOM_INT_TYPES = ("tinyint", "smallint", "int", "bigint")
-
 
 def _snap_commit_bloom(spark: SparkSession, data_dir: str,
-                       cols: list[str],
-                       bits_per_key: int = 10) -> None:
+                       cols: list[str]) -> None:
     """Per-COMMIT-DIR Bloom sidecar for point-lookup dir skipping on
     HIGH-CARDINALITY columns the layout is not sorted by — manifest
     min/max stats prune range predicates on clustered columns but are
     useless for an id equality on a randomly-placed key (every dir's
     [min, max] spans the id space).  One filter per column over the
     whole dir, the ``write_with_bloom`` construction at dir
-    granularity: md5-derived positions (engine-portable), bitset
-    packed executor-side via bit_or word partials, the driver
-    collects m/8 bytes per column.  The sidecar lives INSIDE the
-    commit dir (a leading-underscore file — invisible to parquet
-    scans), so it is immutable with the dir, rides through manifest
-    carry-forward, and vanishes with vacuum; dirs written without one
-    (merge rewrites, compactions, old commits) simply never prune —
-    conservative by construction.
-
-    m is capped at ``SNAP_BLOOM_MAX_BITS`` so the driver-side build
-    (word partials + bytearray) stays bounded no matter how large the
-    commit is; each column also records its Spark storage type so the
-    probe side can refuse cross-type pruning (see
-    ``_snap_bloom_may_match``)."""
-    import base64
+    granularity (m capped at ``SNAP_BLOOM_MAX_BITS``, the column's
+    storage type recorded).  The sidecar lives INSIDE the commit dir
+    (a leading-underscore file — invisible to parquet scans), so it
+    is immutable with the dir, rides through manifest carry-forward,
+    and vanishes with vacuum; dirs written without one (merge
+    rewrites, compactions, old commits) simply never prune —
+    conservative by construction."""
     import json
 
     back = spark.read.parquet(data_dir)
-    types = {f.name: f.dataType.simpleString() for f in back.schema.fields}
-    n_rows = back.count()
-    m = max(64, min(int(bits_per_key * n_rows), SNAP_BLOOM_MAX_BITS))
-    n_words = (m + 63) // 64
+    m = _bloom_m(back.count(), 1)
     out = {}
     for col in cols:
-        words = (back.filter(F.col(col).isNotNull())
-                 .select(F.explode(_bloom_positions(F.col(col), m))
-                         .alias("pos"))
-                 .groupBy(F.shiftright(F.col("pos"), 6).alias("w"))
-                 .agg(F.bit_or(F.expr(
-                     "shiftleft(CAST(1 AS BIGINT), pos % 64)"))
-                     .alias("bits"))
-                 .collect())
-        ws = [0] * n_words
-        for row in words:
-            ws[row["w"]] = row["bits"]
-        bits = bytearray((m + 7) // 8)
-        for wi, word in enumerate(ws):
-            bits[wi * 8:wi * 8 + 8] = (word & 0xFFFFFFFFFFFFFFFF
-                                       ).to_bytes(8, "little")
-        out[col] = {"m": m, "k": BLOOM_K, "type": types.get(col),
-                    "bits": base64.b64encode(
-                        bytes(bits[:(m + 7) // 8])).decode("ascii")}
+        bits = bloom_bitsets(bloom_words(back, F.col(col), m), m)[None]
+        out[col] = {"m": m, "k": BLOOM_K,
+                    "type": back.schema[col].dataType.simpleString(),
+                    "bits": bloom_encode(bits, m)}
     with open(os.path.join(data_dir, SNAP_BLOOM), "w") as fh:
         json.dump(out, fh)
 
 
 def _snap_bloom_load(table_dir: str, d: str,
                      cache: dict | None = None) -> dict | None:
-    """Load + base64-decode one commit dir's Bloom sidecar ONCE per
-    read: an IN-list probe of up to SNAP_IN_PRUNE_CAP values over
-    many dirs would otherwise re-open/re-parse/re-decode the same
-    JSON per (dir, value) pair.  ``cache`` (per-read_snapshot-call
-    dict, keyed by dir) memoizes the decoded form; None = no sidecar."""
-    import base64
+    """Load + decode one commit dir's Bloom sidecar ONCE per read: an
+    IN-list probe of up to SNAP_IN_PRUNE_CAP values over many dirs
+    would otherwise re-open/re-parse/re-decode the same JSON per
+    (dir, value) pair.  ``cache`` (per-read_snapshot-call dict, keyed
+    by dir) memoizes the decoded form; None = no sidecar."""
     import json
 
     if cache is not None and d in cache:
@@ -869,10 +809,8 @@ def _snap_bloom_load(table_dir: str, d: str,
     sc = None
     if os.path.exists(p):
         with open(p) as fh:
-            raw = json.load(fh)
-        sc = {col: {"m": e["m"], "k": e["k"], "type": e.get("type"),
-                    "bits": base64.b64decode(e["bits"])}
-              for col, e in raw.items()}
+            sc = {col: {**e, "bits": bloom_decode(e["bits"])}
+                  for col, e in json.load(fh).items()}
     if cache is not None:
         cache[d] = sc
     return sc
@@ -882,45 +820,10 @@ def _snap_bloom_may_match(table_dir: str, d: str, col: str,
                           value, cache: dict | None = None) -> bool:
     """Probe one commit dir's Bloom sidecar for ``col = value``:
     False ONLY when the sidecar proves the value absent.  Missing
-    sidecar / untracked column / unprovable probe → True.
-
-    Pruning requires BOTH representations to provably agree: the
-    write side hashed Spark's CAST(col AS STRING), so the probe's
-    Python str() must match that rendering — which holds only when
-    the probe's type matches the column's recorded storage type
-    (int probe ↔ integral column, str ↔ string, bool ↔ boolean).
-    A cross-typed probe (e.g. int 107 against a double column
-    holding 107.0 — Spark renders "107.0") or a legacy sidecar with
-    no recorded type never prunes; the residual filter still runs,
-    so the answer stays right."""
-    import hashlib
-
-    sc = _snap_bloom_load(table_dir, d, cache)
-    if sc is None:
-        return True
-    e = sc.get(col)
-    if e is None:
-        return True
-    ctype = e.get("type")
-    if isinstance(value, bool):
-        if ctype != "boolean":
-            return True
-        probe = "true" if value else "false"
-    elif isinstance(value, int):
-        if ctype not in _SNAP_BLOOM_INT_TYPES:
-            return True
-        probe = str(value)
-    elif isinstance(value, str):
-        if ctype != "string":
-            return True
-        probe = value
-    else:
-        return True
-    m, bits = e["m"], e["bits"]
-    positions = [int(hashlib.md5(f"{i}:{probe}".encode())
-                     .hexdigest()[:12], 16) % m
-                 for i in range(e["k"])]
-    return all(bits[pos >> 3] & (1 << (pos & 7)) for pos in positions)
+    sidecar / untracked column → True; otherwise the type-guarded
+    ``bloom_may_contain`` decides."""
+    e = (_snap_bloom_load(table_dir, d, cache) or {}).get(col)
+    return e is None or bloom_may_contain(e, value)
 
 
 def _snap_commit_stats(spark: SparkSession, data_dir: str) -> dict:

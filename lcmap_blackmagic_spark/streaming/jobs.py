@@ -950,14 +950,15 @@ def build_bloom_store(bench_docs: DataFrame, store_dir: str) -> None:
     WORD table (w, bits) — the decontamination signature store a
     streaming curation job probes per batch (llm/bloomfilter.py;
     m/64 rows total, kilobytes on disk)."""
-    from ..llm.bloomfilter import DECON_N, bloom_words
+    from ..llm.bloomfilter import BLOOM_M, DECON_N
     from ..llm.dedup import shingles
+    from ..operators.sketches import bloom_words
 
     grams = (bench_docs
              .select(F.explode(shingles("text", DECON_N)).alias("g"))
              .distinct())
-    bloom_words(grams).coalesce(1).write.mode("overwrite") \
-        .parquet(store_dir)
+    bloom_words(grams, F.col("g"), BLOOM_M).coalesce(1) \
+        .write.mode("overwrite").parquet(store_dir)
 
 
 def bloom_decontam_stream(docs: DataFrame, store_dir: str,
@@ -993,12 +994,13 @@ def _load_bloom_bits(spark, store_dir: str):
     every trigger.  A rebuilt store (newer mtime) invalidates."""
     import os as _os
 
-    from ..llm.bloomfilter import bits_from_words
+    from ..llm.bloomfilter import BLOOM_M
+    from ..operators.sketches import bloom_bitsets
     mt = max((e.stat().st_mtime_ns for e in _os.scandir(store_dir)),
              default=0)
     hit = _BLOOM_STORE_CACHE.get(store_dir)
     if hit is None or hit[0] != mt:
-        bits = bits_from_words(spark.read.parquet(store_dir).collect())
+        bits = bloom_bitsets(spark.read.parquet(store_dir), BLOOM_M)[None]
         _BLOOM_STORE_CACHE[store_dir] = (mt, bits)
         return bits
     return hit[1]

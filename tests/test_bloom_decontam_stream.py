@@ -8,8 +8,9 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from lcmap_blackmagic_spark.llm.bloomfilter import (bits_from_words,
+from lcmap_blackmagic_spark.llm.bloomfilter import (BLOOM_M,
                                                     contaminated_doc_ids)
+from lcmap_blackmagic_spark.operators.sketches import bloom_bitsets
 from lcmap_blackmagic_spark.registry import _t
 from lcmap_blackmagic_spark.streaming.jobs import (bloom_decontam_batch,
                                                    bloom_decontam_stream,
@@ -46,7 +47,7 @@ def test_stream_flags_match_batch_decision(spark, sf_dir):
     streamed = {r["doc_id"] for r in
                 flags.filter("dropped").collect()}
     # batch twin: the same probe over the whole corpus at once
-    bits = bits_from_words(spark.read.parquet(store).collect())
+    bits = bloom_bitsets(spark.read.parquet(store), BLOOM_M)[None]
     batch = {r["doc_id"] for r in
              contaminated_doc_ids(corpus, bits).collect()}
     assert streamed == batch

@@ -96,16 +96,12 @@ ALLOWED: dict[str, str] = {
         "learned BPE merge table — ≤ the num_merges training budget,"
         " a call-site constant",
     # ---- Bloom-filter word rollups (bit-array size, not data size) ----
-    'registry/dedup.py:q_llm_bloom_decontam:bloom_words(bench)':
-        "Bloom word rollup — ≤ BLOOM_M/64 rows, a module constant",
-    'streaming/jobs.py:_load_bloom_bits:spark.read.parquet(store_dir)':
-        "persisted Bloom word store — ≤ BLOOM_M/64 rows, a module"
-        " constant",
-    'storage.py:_snap_commit_bloom:back.filter(F.col(col).isNotNull()) .select(F.explode(_bloom_positions(F.col(col), m)) .alias("pos")) .groupBy(F.shiftright(F.col("pos"), 6).alias("w")) .agg(F.bit_or(F.expr( "shiftleft(CAST(1 AS BIGINT), pos % 64)")) .alias("bits"))':
-        "commit-level Bloom words — ≤ m/64 rows, m a module constant",
-    'storage.py:write_with_bloom:spark.read.parquet(out_dir) .select(F.input_file_name().alias("f"), F.explode(_bloom_positions(F.col(key_col), m)) .alias("pos")) .groupBy("f", F.shiftright(F.col("pos"), 6).alias("w")) .agg(F.bit_or(F.expr( "shiftleft(CAST(1 AS BIGINT), pos % 64)")).alias("bits"))':
-        "per-file Bloom words — n_files × m/64; n_files is the write"
-        " job's own partition count, m a module constant",
+    'operators/sketches.py:bloom_bitsets:words':
+        "Bloom words — ≤ m/64 rows per group; every caller's m is a"
+        " module constant (llm/bloomfilter.BLOOM_M) or capped at"
+        " storage.SNAP_BLOOM_MAX_BITS, and the one grouped caller"
+        " (write_with_bloom) groups by file, n_files being the write"
+        " job's own partition count",
     # ---- guard/window-bounded sides ----
     'ml/train.py:_collect_matrix:df.select("label", "features")':
         "the budget-guarded driver fit: a count × width byte estimate"
