@@ -1,9 +1,13 @@
 """Set operators (SURVEY §2.7).
 
-The prediction pipeline splits rows into *default* segments (sentinel
-dates, no fitted model — they bypass the classifier and get an empty
-probability vector) and real data, then recombines
+The reference's prediction pipeline splits rows into *default*
+segments (sentinel dates, no fitted model — they bypass the classifier
+and get an empty probability vector) and real data, then recombines
 (prediction.py:165-173 group_data, 234-242 default_predictions).
+``plans.prediction.prediction_pipeline`` routes defaults inside its
+scoring pass instead; the split and union stay for the bench-scale
+chip query (``lcmap_predict_chip``) and perfbench's traced
+/prediction.
 """
 
 from __future__ import annotations

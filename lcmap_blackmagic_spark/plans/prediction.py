@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 from ..functions.dates import prediction_dates_sql
 from ..functions.features import average_reflectance, standard_format_array
 from ..operators.joins import combine
-from ..operators.unions import is_default_sql
-from ..schemas import DEFAULT_DAY
+from ..operators.unions import is_default, is_default_sql
+from ..schemas import DEFAULT_DAY, PREDICTIONS
 
 
 def explode_prediction_dates(df: DataFrame, month: int, day: int) -> DataFrame:
@@ -35,8 +35,8 @@ def prediction_inputs(segments: DataFrame, aux: DataFrame,
     """Keys + dates + 68-slot independent feature vector per
     (segment × annual date) — prediction_format (segaux.py:289-298).
 
-    Default segments keep their rows (empty-coef features) and are
-    routed around the classifier downstream via group_data (U3).
+    Default segments keep their rows (empty-coef features, still 68
+    slots); ``prediction_pipeline`` gives them ``prob = []`` (U3).
     """
     joined = combine(segments, aux)
     exploded = explode_prediction_dates(joined, month, day)
@@ -50,15 +50,31 @@ def prediction_inputs(segments: DataFrame, aux: DataFrame,
 
 def prediction_pipeline(segments: DataFrame, aux: DataFrame,
                         model_bytes: bytes, month: int, day: int) -> DataFrame:
-    """End-to-end /prediction (prediction.py:331-345): features →
-    defaults/data split (U3) → broadcast batch inference (UD3) →
-    defaults rejoin with prob=[] (U2). Output matches the
-    PREDICTIONS schema."""
-    from ..ml.predict import predict_probabilities
-    from ..operators.unions import default_predictions, group_data
+    """End-to-end /prediction (prediction.py:331-345) in one pass:
+    features → broadcast batch inference (UD3) → defaults get
+    ``prob = []`` (U2/U3). Output matches the PREDICTIONS schema.
 
-    inputs = prediction_inputs(segments, aux, month, day)
-    defaults, data = group_data(inputs)
-    predicted = (predict_probabilities(data, model_bytes, "independent")
-                 .drop("independent"))
-    return default_predictions(defaults.drop("independent"), predicted)
+    The reference splits defaults off before the matrix and prepends
+    them afterwards (``operators.unions`` group_data /
+    default_predictions); here every row is scored and the default
+    rows' probabilities are replaced in the same projection. The
+    feature vector is 68 slots for default segments too
+    (``standard_format_array``), and scoring is row-wise, so the rows
+    equal the split-and-union composition without scanning, joining
+    and exploding the chip once per branch.
+
+    The segments are hash-partitioned on the pixel into one partition
+    per core first: a chip written by ``storage.overwrite_partitions``
+    is one file, often one row group, which a scan reads in one task.
+    The explicit count keeps AQE from coalescing the spread."""
+    from ..ml.predict import predict_probabilities
+
+    n = segments.sparkSession.sparkContext.defaultParallelism
+    spread = segments.repartition(n, "px", "py")
+    scored = predict_probabilities(
+        prediction_inputs(spread, aux, month, day), model_bytes,
+        "independent")
+    prob = (F.when(is_default(), F.array().cast("array<float>"))
+            .otherwise(F.col("prob")).alias("prob"))
+    return scored.select(*[prob if c == "prob" else c
+                           for c in PREDICTIONS.fieldNames()])

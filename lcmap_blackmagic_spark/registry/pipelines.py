@@ -239,17 +239,17 @@ def q_lcmap_predict_chip(spark, sf_dir):
     # tile_pipeline's fit stages with the training matrix checkpointed
     # once (sample + the fit's collect re-ran the assembly)
     *_, model = _train_chip(segs, aux)
-    # prediction_pipeline's stages, inlined (the tile_train precedent)
-    # to cut the final job's contention surface: the defaults/data
-    # union otherwise re-runs the fixture assembly + feature build in
-    # BOTH branches (a 64-task stage), and the modeled branch spawns
-    # one Python worker per upstream partition for a ~20 MB matrix.
-    # Checkpointing the assembled inputs once and coalescing the
-    # Arrow side to 8 partitions keeps the inference stage at 8
-    # Python tasks over staged rows — the shape that stayed flat
-    # under driver-suite load (r12's 5.9→14 s swing; SCALE.md r13).
-    # Chip-scale only: the real tile path (prediction_pipeline) keeps
-    # full parallelism — there the matrix is tile-sized, not 20 MB.
+    # The reference's defaults/data split and union, inlined instead
+    # of prediction_pipeline (the tile_train precedent), for two
+    # reasons of this query's own.  Its inputs are checkpointed: segs
+    # and aux also feed the fit, and the assembled inputs are staged
+    # once, so both union branches read staged rows and the md5
+    # fixture generation and feature build run once.  And the Arrow
+    # side is coalesced to 8 partitions: 8 Python tasks over staged
+    # rows, the shape that stayed flat under full-bench load (r12's
+    # 5.9→14 s swing; SCALE.md r13).  prediction_pipeline, the request
+    # path, has neither a second consumer nor that load: it scores in
+    # one pass, spread over defaultParallelism partitions.
     from ..ml.predict import predict_probabilities
     from ..operators.unions import default_predictions, group_data
     from ..plans.prediction import prediction_inputs

@@ -10,8 +10,13 @@ is dynamic partition overwrite (one atomic job, no separate delete).
 Scale notes: partition pruning on (cx, cy) / (tx, ty) makes the
 single-chip reads of the reference (select_segments ceph.py:125-129)
 metadata-only lookups; a whole-tile read is 2500 pruned partitions
-scanned in parallel. Writers sort within partitions so parquet
-row-group stats enable pixel-range skipping.
+scanned in parallel. Writers repartition by the partition keys, so
+each partition is one file. Their within-partition sort is on those
+keys only: it is the ordering Spark's partitioned writer needs (one
+open file at a time), and the writer would add the same sort itself.
+The keys are constant in a file and not stored in it, so the sort
+gives no row-group statistics to skip pixel ranges on, and the row
+order inside a file is the order the shuffle delivers.
 """
 
 from __future__ import annotations
@@ -245,7 +250,8 @@ def compact_partitions(spark: SparkSession, root: str,
     compacted copy lands in a sibling dataset and is swapped in with
     two renames — the same read-shape guarantee as
     ``overwrite_partitions`` (repartition by key → one file per
-    partition, sorted so row-group stats allow range skipping).
+    partition; the sort on the partition keys is the writer's own
+    ordering, not a pixel order — see the module docstring).
     On a real object store the swap step would be a table-format
     commit (Iceberg/Delta rewrite-files); the partition layout and
     job shape are identical.

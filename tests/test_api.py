@@ -143,6 +143,18 @@ def test_segment_job_releases_staged_data(spark, tmp_path, monkeypatch,
         assert not os.path.exists(os.path.join(root, "segment"))
 
 
+def _job_census(sc, group: str, call) -> tuple:
+    """``call()``'s result and the number of Spark jobs it ran."""
+    sc.setJobGroup(group, f"{group} job census")
+    try:
+        r = call()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return r, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_segment_job_detects_each_pixel_once(spark, tmp_path):
     """The chip and segment writes share one detection pass (the
     reference's segment.py:253-264 saves all three entities from one
@@ -155,19 +167,13 @@ def test_segment_job_detects_each_pixel_once(spark, tmp_path):
         calls.add(1)
         return stub_detector(dates, bands, qas)
 
-    group = "segment-job-census"
-    sc.setJobGroup(group, "run_segment_job job census")
-    try:
-        r = run_segment_job(spark, GOOD_SEG, str(tmp_path / "store"),
-                            side=5, detector=counting_detector)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+    r, jobs = _job_census(sc, "segment-job-census", lambda: run_segment_job(
+        spark, GOOD_SEG, str(tmp_path / "store"), side=5,
+        detector=counting_detector))
     assert r["status"] == 200
     assert r["metrics"]["n_detections"] == 25
     assert calls.value == 25          # one detector call per pixel
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 12
+    assert jobs <= 12
 
 
 def test_tile_then_prediction_jobs(spark, tmp_path):
@@ -195,6 +201,35 @@ def test_tile_then_prediction_jobs(spark, tmp_path):
     assert sizes <= {0, 9} and 9 in sizes
 
     assert health() == {"status": 200}
+
+
+def test_prediction_job_scores_in_one_pass(spark, tmp_path):
+    """A /prediction request on a stored chip (the benchmark's path:
+    segments and aux from ``storage.read_partition``) runs a bounded
+    number of Spark jobs: one scan each of segments and aux, no
+    defaults/data union.  The two-branch union ran 7 here."""
+    from lcmap_blackmagic_spark.api import (run_prediction_job,
+                                            run_tile_job)
+    from lcmap_blackmagic_spark.sources.fixtures import (synth_aux,
+                                                         synth_segments)
+    root = str(tmp_path / "store")
+    tp = {"tx": -9000, "ty": 9000, "acquired": "1980/2019",
+          "date": "2001-07-01", "chips": [(0, 0)]}
+    assert run_tile_job(spark, tp, root)["status"] == 200
+    storage.overwrite_partitions(synth_segments(spark, cx=0, cy=0),
+                                 root, "segment")
+    storage.overwrite_partitions(synth_aux(spark, cx=0, cy=0), root, "aux")
+    pp = {"tx": -9000, "ty": 9000, "cx": 0, "cy": 0,
+          "acquired": "1980/2019", "month": 7, "day": 1}
+    r, jobs = _job_census(spark.sparkContext, "prediction-job-census",
+                          lambda: run_prediction_job(
+                              spark, pp, root,
+                              segments=storage.read_partition(
+                                  spark, root, "segment", cx=0, cy=0),
+                              aux=storage.read_partition(
+                                  spark, root, "aux", cx=0, cy=0)))
+    assert r["status"] == 200
+    assert jobs <= 6
 
 
 def test_prediction_job_without_model_500(spark, tmp_path):

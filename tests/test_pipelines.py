@@ -8,6 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from lcmap_blackmagic_spark import storage
 from lcmap_blackmagic_spark.ml.train import train_model
 from lcmap_blackmagic_spark.plans.prediction import (prediction_inputs,
                                                      prediction_pipeline)
@@ -16,7 +17,7 @@ from lcmap_blackmagic_spark.plans.segment import (pixel_records,
                                                   segment_pipeline)
 from lcmap_blackmagic_spark.plans.tile import tile_pipeline
 from lcmap_blackmagic_spark.plans.training import training_data
-from lcmap_blackmagic_spark.schemas import DEFAULT_DAY, SEGMENTS
+from lcmap_blackmagic_spark.schemas import DEFAULT_DAY, PREDICTIONS, SEGMENTS
 from lcmap_blackmagic_spark.sources.fixtures import (synth_ard, synth_aux,
                                                      synth_segments)
 
@@ -139,6 +140,15 @@ def model(segments, aux):
     return model_bytes
 
 
+@pytest.fixture(scope="module")
+def spark_ml_model(segments, aux):
+    model_bytes, _ = tile_pipeline(
+        segments, aux, "2001-07-01",
+        target_samples=200, class_min=5, class_max=40, seed=42,
+        trainer="spark_ml")
+    return model_bytes
+
+
 def test_tile_pipeline_trains(model):
     assert isinstance(model, bytes) and len(model) > 0
 
@@ -156,7 +166,7 @@ def test_prediction_inputs_explode(segments, aux):
     assert all(len(r["independent"]) == 68 for r in rows)
 
 
-def test_tile_predict_spark_ml_e2e(segments, aux):
+def test_tile_predict_spark_ml_e2e(segments, aux, spark_ml_model):
     """The distributed trainer branch (pyspark.ml multinomial logistic
     regression — no driver-side matrix) through the SAME model-bytes +
     9-prob contract: tile fit → broadcast → mapInPandas predict, with
@@ -167,10 +177,7 @@ def test_tile_predict_spark_ml_e2e(segments, aux):
 
     from lcmap_blackmagic_spark.ml.train import evaluate
 
-    model_bytes, _ = tile_pipeline(
-        segments, aux, "2001-07-01",
-        target_samples=200, class_min=5, class_max=40, seed=42,
-        trainer="spark_ml")
+    model_bytes = spark_ml_model
     assert pickle.loads(model_bytes)["kind"] == "logreg"
     preds = prediction_pipeline(segments, aux, model_bytes, 7, 1)
     data = [r for r in preds.collect() if r["pday"] != DEFAULT_DAY]
@@ -199,6 +206,76 @@ def test_prediction_pipeline_e2e(segments, aux, model):
     # plus one per default segment
     pi = prediction_inputs(segments, aux, 7, 1)
     assert len(rows) == pi.count()
+
+
+def _two_branch_predictions(segments, aux, model_bytes):
+    """The reference's composition (prediction.py:165-173, 186-197,
+    234-242): defaults split off before the matrix, the rest scored,
+    defaults prepended with ``prob = []``."""
+    from lcmap_blackmagic_spark.ml.predict import predict_probabilities
+    from lcmap_blackmagic_spark.operators.unions import (
+        default_predictions, group_data)
+    defaults, data = group_data(prediction_inputs(segments, aux, 7, 1))
+    predicted = (predict_probabilities(data, model_bytes, "independent")
+                 .drop("independent"))
+    return default_predictions(defaults.drop("independent"), predicted)
+
+
+@pytest.mark.parametrize("model_name", ["model", "spark_ml_model"])
+def test_prediction_pipeline_equals_two_branch_union(request, segments,
+                                                     aux, model_name):
+    """Scoring every row and emptying the defaults' probabilities in
+    one projection gives the split-and-union composition's rows,
+    probabilities included, for the centroid and the logistic model."""
+    model_bytes = request.getfixturevalue(model_name)
+    one = prediction_pipeline(segments, aux, model_bytes, 7, 1)
+    two = _two_branch_predictions(segments, aux, model_bytes)
+    assert one.columns == two.columns == PREDICTIONS.fieldNames()
+    assert two.filter(F.size("prob") == 0).count() > 0
+    assert one.exceptAll(two).count() == 0
+    assert two.exceptAll(one).count() == 0
+
+
+def _stored_chip(spark, tmp_path, segments, aux):
+    """Write the fixture chip as ``storage`` does (one file per
+    partition) and read it back partition-pruned, as /prediction
+    does."""
+    root = str(tmp_path / "store")
+    storage.overwrite_partitions(segments, root, "segment")
+    storage.overwrite_partitions(aux, root, "aux")
+    cx, cy = segments.select("cx", "cy").first()
+    return (storage.read_partition(spark, root, "segment", cx=cx, cy=cy),
+            storage.read_partition(spark, root, "aux", cx=cx, cy=cy))
+
+
+def test_prediction_pipeline_spreads_a_one_file_chip(spark, tmp_path,
+                                                     segments, aux,
+                                                     model):
+    """A stored chip is one parquet file, which a scan reads in one
+    task; the modeled rows are scored over the session's cores."""
+    segs, aux_read = _stored_chip(spark, tmp_path, segments, aux)
+    preds = prediction_pipeline(segs, aux_read, model, 7, 1)
+    parts = (preds.filter(F.size("prob") > 0)
+             .select(F.spark_partition_id().alias("p")).distinct().count())
+    assert parts >= min(2, spark.sparkContext.defaultParallelism)
+
+
+def test_prediction_pipeline_plan_scans_each_input_once(spark, tmp_path,
+                                                        segments, aux,
+                                                        model):
+    """One pass: no Union, one scan of the segments and one of aux."""
+    segs, aux_read = _stored_chip(spark, tmp_path, segments, aux)
+    preds = prediction_pipeline(segs, aux_read, model, 7, 1)
+    preds.write.format("noop").mode("overwrite").save()
+    plan = preds._jdf.queryExecution().executedPlan().toString()
+    # the scan's location is abbreviated; its read schema tells the
+    # two inputs apart
+    scans = [ln.split("ReadSchema:")[1] for ln in plan.splitlines()
+             if "FileScan parquet" in ln]
+    assert "Union" not in plan
+    assert sum("blcoef" in r for r in scans) == 1
+    assert sum("aspect" in r for r in scans) == 1
+    assert len(scans) == 2
 
 
 def test_cross_validation_spark_ml(spark, sf_dir):
