@@ -6,21 +6,23 @@ The reference shuffles with an *unseeded* ``RandomState().permutation``
 everything; with ``order_col`` set, sampling is fully deterministic and
 oracle-checkable.
 
-Scale notes: the per-class caps come from a tiny aggregated statistics
-DataFrame (≤ num_classes rows) and are broadcast; the fact table is
-shuffled once, by label, for the row_number window. For heavily skewed
-labels, ``sampleBy`` (approximate mode) avoids the single-reducer
-hotspot of a huge class partition.
+Scale notes: the per-class caps come from one driver collect of the
+per-label counts (≤ num_classes rows) and enter the plan as literals;
+the fact table is shuffled once, by label, for the row_number window.
+For heavily skewed labels, ``sampleBy`` (approximate mode) avoids the
+single-reducer hotspot of a huge class partition.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, MapType
 
-from .stats import label_statistics
+from .stats import label_counts
 
 
 def randomize(df: DataFrame, seed: int = 42) -> DataFrame:
@@ -28,20 +30,18 @@ def randomize(df: DataFrame, seed: int = 42) -> DataFrame:
     return df.orderBy(F.rand(seed))
 
 
-def class_targets(df: DataFrame, label_col: str,
-                  target_samples: int, class_min: int,
-                  class_max: int) -> DataFrame:
-    """Per-class sample budget: ceil(target * pct) clipped to
-    [class_min, class_max] (tile.py:242-284; defaults
-    blackmagic/__init__.py:17-19)."""
-    stats = label_statistics(df, label_col)
-    return stats.select(
-        label_col,
-        F.least(
-            F.greatest(F.ceil(F.lit(target_samples) * F.col("pct")),
-                       F.lit(class_min)),
-            F.lit(class_max),
-        ).alias("cap"))
+def class_caps(counts: dict, target_samples: int, class_min: int,
+               class_max: int) -> dict:
+    """Per-class sample budget from ``{label: count}``: ceil(target ·
+    pct) clipped to [class_min, class_max] (tile.py:242-284; defaults
+    blackmagic/__init__.py:17-19), in IEEE doubles as the SQL form
+    ``least(greatest(ceil(target * (cnt / total)), min), max)``
+    computes it.  The total counts every row, a NULL label's included;
+    a NULL label gets no cap, so its rows are never sampled."""
+    total = sum(counts.values())
+    return {lbl: min(max(math.ceil(target_samples * (n / total)),
+                         class_min), class_max)
+            for lbl, n in counts.items() if lbl is not None}
 
 
 # Largest class the exact (windowed) mode will sort in one reducer
@@ -64,28 +64,34 @@ def stratified_sample(df: DataFrame, label_col: str,
     reproducible in any engine (and the skew switch is disabled,
     since the caller demanded determinism).
 
-    Without ``order_col``, the skew switch is automatic: if the
-    largest class exceeds ``exact_class_limit`` rows, the windowed
-    mode's per-class single-reducer sort would hotspot, so the
-    operator falls through to ``stratified_sample_approx`` (Bernoulli
-    ``sampleBy``, no window) — the at-scale default SCALE.md names.
-    The count check is one map-side-combined aggregate over ≤
-    num_classes rows.
+    The per-label counts are collected once (``label_counts``, ≤
+    num_classes rows) and drive everything else: without
+    ``order_col``, the skew switch — if the largest class exceeds
+    ``exact_class_limit`` rows, the windowed mode's per-class
+    single-reducer sort would hotspot, so the sample is the Bernoulli
+    ``sampleBy`` of ``stratified_sample_approx`` over the same counts,
+    the at-scale default SCALE.md names — and otherwise the caps,
+    which enter the plan as a literal label → cap map: no second
+    aggregation, no join.  Columns come back label first.
     """
-    if order_col is None:
-        mx = (df.groupBy(label_col).count()
-              .agg(F.max("count")).first()[0]) or 0
-        if mx > exact_class_limit:
-            return stratified_sample_approx(
-                df, label_col, target_samples, class_min, class_max,
-                seed=seed)
-    caps = class_targets(df, label_col, target_samples, class_min, class_max)
+    counts = label_counts(df, label_col)
+    if (order_col is None
+            and max(counts.values(), default=0) > exact_class_limit):
+        return _sample_by(df, label_col, counts, target_samples,
+                          class_min, class_max, seed)
+    caps = class_caps(counts, target_samples, class_min, class_max)
+    schema = df.schema
+    cols = [label_col, *[c for c in schema.fieldNames() if c != label_col]]
+    # keys cast to the label's own type, so the lookup needs no
+    # coercion of the column; a label absent from the map (NULL) reads
+    # a NULL cap and its rows drop, as the old caps join dropped them
+    cap = F.create_map(*[F.lit(x) for kv in caps.items() for x in kv]).cast(
+        MapType(schema[label_col].dataType, LongType()))
     order = F.col(order_col) if order_col else F.rand(seed)
     w = Window.partitionBy(label_col).orderBy(order)
     return (df.withColumn("__rn", F.row_number().over(w))
-              .join(F.broadcast(caps), on=label_col)
-              .filter(F.col("__rn") <= F.col("cap"))
-              .drop("__rn", "cap"))
+              .filter(F.col("__rn") <= cap[F.col(label_col)])
+              .select(cols))
 
 
 def stratified_sample_approx(df: DataFrame, label_col: str,
@@ -93,11 +99,21 @@ def stratified_sample_approx(df: DataFrame, label_col: str,
                              class_max: int, seed: int = 42) -> DataFrame:
     """Approximate mode for skewed scale: per-class Bernoulli fractions
     via ``sampleBy`` — no window, no per-class single-partition sort."""
-    counts = {r[label_col]: r["cnt"]
-              for r in label_statistics(df, label_col).collect()}
+    return _sample_by(df, label_col, label_counts(df, label_col),
+                      target_samples, class_min, class_max, seed)
+
+
+def _sample_by(df: DataFrame, label_col: str, counts: dict,
+               target_samples: int, class_min: int, class_max: int,
+               seed: int) -> DataFrame:
+    """``sampleBy`` with fraction want / n per label, want the integer
+    ceil-div budget clipped to [class_min, class_max]; a NULL label
+    gets no fraction, so its rows are never sampled."""
     total = sum(counts.values())
     fractions = {}
     for lbl, n in counts.items():
+        if lbl is None:
+            continue
         want = min(max(-(-target_samples * n // total), class_min), class_max)
         fractions[lbl] = min(1.0, want / n)
     return df.sampleBy(label_col, fractions, seed=seed)

@@ -22,3 +22,9 @@ def label_statistics(df: DataFrame, label_col: str = "label") -> DataFrame:
     return (counts.crossJoin(F.broadcast(total))
             .withColumn("pct", F.col("cnt") / F.col("__total"))
             .drop("__total"))
+
+
+def label_counts(df: DataFrame, label_col: str = "label") -> dict:
+    """``{label: row count}`` on the driver, a NULL label included as
+    ``None`` — one collect of one row per distinct label."""
+    return {r[0]: r[1] for r in df.groupBy(label_col).count().collect()}

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from ..ml.train import TEST_SIZE, train_model
 from ..operators.sampling import stratified_sample, train_test_split
 from ..operators.stats import label_statistics
+from ..staging import request_staging
 from .training import training_data
 
 TARGET_SAMPLES = 20_000_000
@@ -31,19 +32,20 @@ def tile_pipeline(segments: DataFrame, aux: DataFrame, date: str,
                   ) -> tuple[bytes, DataFrame]:
     """Returns (model_bytes, label_statistics DataFrame).
     ``trainer='spark_ml'`` selects the fully distributed
-    pyspark.ml fit (no driver-side matrix)."""
-    # localCheckpoint: FOUR downstream consumers (stats, the sample's
-    # per-class count collect, the split, the fit's matrix collect)
-    # each re-ran the segments⨝aux assembly without it — the same
-    # barrier the bench-scale twin (registry.pipelines.q_lcmap_tile_
-    # train) applies; the matrix is labeled-pixel-sized.  Lazy (r15):
-    # the first consuming action materializes it in its own job, the
-    # rest read blocks — one fewer blocking job, same reuse.
-    data = (training_data(segments, aux, date, chips)
-            .localCheckpoint(eager=False))
-    stats = label_statistics(data, "label")
-    sample = stratified_sample(data, "label", target_samples,
-                               class_min, class_max, seed=seed)
-    train, test = train_test_split(sample, TEST_SIZE, seed=seed)
-    model = train_model(train, test, trainer=trainer)
-    return model, stats
+    pyspark.ml fit (no driver-side matrix).
+
+    The training matrix is staged for the call (``request_staging``):
+    the sampler's label-count collect materializes it, and the fit
+    reads its blocks instead of re-running the segments⨝aux assembly.
+    The blocks are released before the call returns, so the returned
+    statistics, an unevaluated plan, recompute from the inputs if read.
+    A ``localCheckpoint(eager=False)`` here is not lazy: under AQE the
+    call itself runs the plan's broadcast stages (the aux dedup
+    shuffle and the broadcast) before any action."""
+    with request_staging() as stage:
+        data = stage(training_data(segments, aux, date, chips))
+        sample = stratified_sample(data, "label", target_samples,
+                                   class_min, class_max, seed=seed)
+        train, test = train_test_split(sample, TEST_SIZE, seed=seed)
+        model = train_model(train, test, trainer=trainer)
+    return model, label_statistics(data, "label")

@@ -27,14 +27,16 @@ from ..operators.joins import combine
 
 def chips_predicate(chips: Sequence[tuple[int, int]] | None):
     """WHERE (cx, cy) IN chips — the request's chip list
-    (tile.py:151-170). None = whole extent."""
+    (tile.py:151-170). None = whole extent.
+
+    One SQL expression with BIGINT literals (the key columns' type),
+    built in one py4j call: a tile-only request lists 2,500 chips, and
+    a Column-built ``struct(...).isin(...)`` makes about ten calls per
+    chip (about 10 s on a 4-core host)."""
     if not chips:
         return F.lit(True)
-    # literal structs must match the key columns' BIGINT type — a bare
-    # Python int literal makes an INT struct, which isin() rejects
-    return F.struct(F.col("cx"), F.col("cy")).isin(
-        [F.struct(F.lit(cx).cast("bigint"), F.lit(cy).cast("bigint"))
-         for (cx, cy) in chips])
+    keys = ", ".join(f"({int(cx)}L, {int(cy)}L)" for cx, cy in chips)
+    return F.expr(f"(cx, cy) IN ({keys})")
 
 
 def training_data(segments: DataFrame, aux: DataFrame, date: str,
@@ -46,8 +48,9 @@ def training_data(segments: DataFrame, aux: DataFrame, date: str,
     when ``keep_keys``). Feature order is the contractual 69-slot
     layout minus the label (segaux.py:248-275).
     """
-    segs = segments_filter(segments.filter(chips_predicate(chips)), date)
-    dim = aux_filter(aux.filter(chips_predicate(chips)))
+    on_chips = chips_predicate(chips)
+    segs = segments_filter(segments.filter(on_chips), date)
+    dim = aux_filter(aux.filter(on_chips))
     joined = combine(segs, dim)                      # J1 broadcast join
     dated = joined.withColumn("date", F.lit(date))   # F5 training date
     with_ar = average_reflectance(dated)             # F7

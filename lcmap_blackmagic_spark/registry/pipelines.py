@@ -155,9 +155,9 @@ def _train_chip(segs, aux):
     # matrix (stats, the sample, the fit's collect, the split counts) —
     # without it Catalyst re-runs the segments⨝aux assembly per
     # consumer.  ~20k rows × 69 features: sample-sized, not tile-sized.
-    # Lazy (r15): the fit's matrix collect is the first action and
-    # materializes it in the same job; the returned stats/split
-    # aggregates then read blocks under the caller's action.
+    # Lazy (r15): the sampler's label-count collect is the first
+    # action and materializes it; the fit and the returned stats/split
+    # aggregates then read blocks.
     ordc = F.conv(F.substring(F.md5(F.concat_ws(
         ":", F.lit("ord"), F.col("px").cast("string"),
         F.col("py").cast("string"))), 1, 12), 16, 10).cast("bigint")

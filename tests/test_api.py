@@ -176,6 +176,76 @@ def test_segment_job_detects_each_pixel_once(spark, tmp_path):
     assert jobs <= 12
 
 
+TILE_PARAMS = {"tx": -9000, "ty": 9000, "acquired": "1980/2019",
+               "date": "2001-07-01", "chips": [(0, 0), (3000, 0)]}
+
+
+@pytest.fixture
+def tile_store(spark, tmp_path):
+    """A storage root holding TILE_PARAMS' chips' segments and aux."""
+    from lcmap_blackmagic_spark.sources.fixtures import (synth_aux,
+                                                         synth_segments)
+    root = str(tmp_path / "store")
+    for cx, cy in TILE_PARAMS["chips"]:
+        storage.overwrite_partitions(
+            synth_segments(spark, cx=cx, cy=cy, side=8), root, "segment")
+        storage.overwrite_partitions(
+            synth_aux(spark, cx=cx, cy=cy, side=8), root, "aux")
+    return root
+
+
+def _run_stored_tile_job(spark, root, **kw):
+    """/tile over the stored chips, inputs read as the benchmark
+    reads them (``storage.read``)."""
+    from lcmap_blackmagic_spark.api import run_tile_job
+    return run_tile_job(spark, TILE_PARAMS, root,
+                        segments=storage.read(spark, root, "segment"),
+                        aux=storage.read(spark, root, "aux"), **kw)
+
+
+def test_tile_job_trains_from_one_staged_matrix(spark, tile_store):
+    """The training matrix is built once and its label counts
+    collected once (the skew switch and the caps share them), and the
+    tile record is a row of literals: the request runs a bounded
+    number of Spark jobs.  With a checkpointed matrix, a second counts
+    aggregation and a ``createDataFrame`` record it ran 14 here."""
+    r, jobs = _job_census(spark.sparkContext, "tile-job-census",
+                          lambda: _run_stored_tile_job(spark, tile_store))
+    assert r["status"] == 200
+    assert jobs <= 9
+
+
+# None = a successful request; a stage name = its test_exception;
+# tile_write = the tile record's write raises inside save
+TILE_RELEASE_CASES = [None, "train", "save", "tile_write"]
+
+
+@pytest.mark.parametrize("fail", TILE_RELEASE_CASES)
+def test_tile_job_releases_staged_data(spark, tile_store, monkeypatch,
+                                       fail):
+    """The staged training matrix is released on success and on every
+    failure path, and a failed request writes no tile record."""
+    test_exception = fail
+    if fail == "tile_write":
+        test_exception = None
+
+        def overwrite(df, root, entity, *a, **kw):
+            raise RuntimeError("injected tile write failure")
+        monkeypatch.setattr(storage, "overwrite_partitions", overwrite)
+
+    before = _persistent_rdd_ids(spark)
+    r = _run_stored_tile_job(spark, tile_store,
+                             test_exception=test_exception)
+    assert _persistent_rdd_ids(spark) == before
+    if fail is None:
+        assert r["status"] == 200
+        assert storage.read(spark, tile_store, "tile").count() == 1
+    else:
+        stage = "save" if fail == "tile_write" else fail
+        assert r["status"] == 500 and repr(stage) in r["message"]
+        assert not os.path.exists(os.path.join(tile_store, "tile"))
+
+
 def test_tile_then_prediction_jobs(spark, tmp_path):
     """The /tile → /prediction composition: model persisted as a hex
     1-row tile record, then loaded, broadcast, and applied."""

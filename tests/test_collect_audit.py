@@ -24,10 +24,11 @@ Everything else — including groupBy aggregates, whose group count is
 data-dependent — needs an ALLOWED entry arguing the bound.
 
 Known limitation (same as the broadcast audit): boundedness
-established in a CALLEE (``label_statistics`` returns ≤ num-label
-rows) or by a guard statement (train.py's byte-budget check) is
+established outside the receiver — by a callee, by the caller's
+contract (``label_counts`` groups by a label column: ≤ num-label
+rows) or by a guard statement (train.py's byte-budget check) — is
 invisible to the sweep; those sites carry allowlist entries that
-state the callee/guard argument explicitly.
+state the argument explicitly.
 """
 
 from __future__ import annotations
@@ -53,8 +54,10 @@ ALLOWED: dict[str, str] = {
         "NUM_CLASSES × n_features rows — both model constants",
     'ml/train.py:_train_spark_ml:train_df.select("label").distinct()':
         "distinct labels — ≤ NUM_CLASSES by the label contract",
-    'operators/sampling.py:stratified_sample_approx:label_statistics(df, label_col)':
-        "one row per label — ≤ NUM_CLASSES by the label contract",
+    'operators/stats.py:label_counts:df.groupBy(label_col).count()':
+        "one row per label — ≤ NUM_CLASSES by the label contract; the"
+        " sampler's one counts collect (skew switch, caps and the"
+        " sampleBy fractions all read it)",
     'registry/analytics.py:q_pareto_skyline:pts.withColumn("b", bx).groupBy("b") .agg(F.max("y").alias("my"))':
         "one row per x-bucket — ≤ SKY_BUCKETS, a module constant",
     # ---- model-constant sides (k-means / IVF / BPE models) ----

@@ -60,9 +60,13 @@ def test_cube_single_expand(q):
     assert plan.count("Expand (") == 1
 
 
-def test_stratified_sample_broadcasts_caps(q):
+def test_stratified_sample_caps_are_literals(q):
+    # the per-label caps are a literal map the filter over the window
+    # reads: no caps join, and the label shuffle is the one exchange
     plan = fmt_plan(q("stratified_sample"))
-    assert "BroadcastHashJoin" in plan  # caps table is tiny
+    assert "Join" not in plan
+    assert plan.count("Exchange (") == 1
+    assert "Window" in plan
 
 
 def test_stratified_sample_hash_no_window_no_fact_shuffle(q):

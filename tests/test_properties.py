@@ -16,8 +16,7 @@ from pyspark.sql import functions as F
 from lcmap_blackmagic_spark.functions.dates import (date_from_ordinal,
                                                     ordinal_from_date,
                                                     prediction_dates_array)
-from lcmap_blackmagic_spark.operators.sampling import (class_targets,
-                                                       stratified_sample)
+from lcmap_blackmagic_spark.operators.sampling import stratified_sample
 
 SETTINGS = settings(max_examples=8, deadline=None,
                     suppress_health_check=[HealthCheck.function_scoped_fixture])

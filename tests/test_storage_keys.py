@@ -40,3 +40,40 @@ def test_read_partition_still_prunes(spark, root):
     assert "cx" in filters and "cy" in filters, plan
     assert {(r.cx, r.cy) for r in df.select("cx", "cy").collect()} == \
         {(cx, cy)}
+
+
+def test_chips_predicate_selects_what_struct_isin_selects(spark):
+    """The SQL ``(cx, cy) IN (...)`` predicate over a tile-only
+    request's 2,500 chips plus off-tile keys (negative ones among
+    them) keeps exactly the rows the struct ``isin`` form keeps;
+    ``chips=None`` keeps every row."""
+    from pyspark.sql import functions as F
+
+    from lcmap_blackmagic_spark.functions.grid import chips_for_tile, snap
+    from lcmap_blackmagic_spark.plans.training import chips_predicate
+    tx, ty = snap(*CHIPS[0], grain="tile")
+    listed = chips_for_tile(tx, ty) + [(-3000, -3000), (-1, 0), (0, -1),
+                                       (0, 0)]
+    near = ([(cy, cx) for cx, cy in listed[:50]]
+            + [(tx - 3000, ty), (tx, ty + 3000), (-3000, -6000), (1, 0)])
+    unlisted = [k for k in dict.fromkeys(near) if k not in set(listed)]
+    df = spark.createDataFrame(listed + unlisted, "cx long, cy long")
+    want = df.filter(F.struct("cx", "cy").isin(
+        [F.struct(F.lit(cx).cast("bigint"), F.lit(cy).cast("bigint"))
+         for cx, cy in listed]))
+    got = df.filter(chips_predicate(listed))
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    assert {(r.cx, r.cy) for r in got.collect()} == set(listed)
+    assert df.filter(chips_predicate(None)).count() == df.count()
+
+
+def test_chips_predicate_prunes_partitions(spark, root):
+    from lcmap_blackmagic_spark.plans.training import chips_predicate
+    df = storage.read(spark, root, "segment").filter(
+        chips_predicate(CHIPS[:1]))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    filters = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "cx" in filters and "cy" in filters, plan
+    assert {(r.cx, r.cy) for r in df.select("cx", "cy").collect()} == \
+        {CHIPS[0]}
