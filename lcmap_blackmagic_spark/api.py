@@ -252,11 +252,10 @@ def run_tile_job(spark, params: dict, storage_root: str,
         return {"segments": s, "aux": a}
 
     def train(ctx):
-        model, stats = tile_pipeline(
+        ctx["model"] = tile_pipeline(
             ctx["segments"], ctx["aux"], p["date"], chips=p["chips"],
             target_samples=target_samples, class_min=class_min,
             class_max=class_max)
-        ctx["model"] = model
         return ctx
 
     def save(ctx):

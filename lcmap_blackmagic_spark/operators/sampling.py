@@ -53,9 +53,7 @@ EXACT_CLASS_ROWS_LIMIT = 50_000_000
 def stratified_sample(df: DataFrame, label_col: str,
                       target_samples: int, class_min: int, class_max: int,
                       seed: int = 42,
-                      order_col: str | None = None,
-                      exact_class_limit: int = EXACT_CLASS_ROWS_LIMIT
-                      ) -> DataFrame:
+                      order_col: str | None = None) -> DataFrame:
     """Per-class capped/floored sample — reference ``sample``
     (tile.py:228-284; unit test test_B_tile.py:255-274).
 
@@ -67,7 +65,7 @@ def stratified_sample(df: DataFrame, label_col: str,
     The per-label counts are collected once (``label_counts``, ≤
     num_classes rows) and drive everything else: without
     ``order_col``, the skew switch — if the largest class exceeds
-    ``exact_class_limit`` rows, the windowed mode's per-class
+    ``EXACT_CLASS_ROWS_LIMIT`` rows, the windowed mode's per-class
     single-reducer sort would hotspot, so the sample is the Bernoulli
     ``sampleBy`` of ``stratified_sample_approx`` over the same counts,
     the at-scale default SCALE.md names — and otherwise the caps,
@@ -76,7 +74,7 @@ def stratified_sample(df: DataFrame, label_col: str,
     """
     counts = label_counts(df, label_col)
     if (order_col is None
-            and max(counts.values(), default=0) > exact_class_limit):
+            and max(counts.values(), default=0) > EXACT_CLASS_ROWS_LIMIT):
         return _sample_by(df, label_col, counts, target_samples,
                           class_min, class_max, seed)
     caps = class_caps(counts, target_samples, class_min, class_max)

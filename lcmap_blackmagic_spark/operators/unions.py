@@ -5,9 +5,10 @@ segments (sentinel dates, no fitted model — they bypass the classifier
 and get an empty probability vector) and real data, then recombines
 (prediction.py:165-173 group_data, 234-242 default_predictions).
 ``plans.prediction.prediction_pipeline`` routes defaults inside its
-scoring pass instead; the split and union stay for the bench-scale
-chip query (``lcmap_predict_chip``) and perfbench's traced
-/prediction.
+scoring pass instead, and every registry /prediction entry runs it.
+The split and union now serve only perfbench's traced /prediction and
+the tests' reference composition (tests/test_pipelines.py pins the
+one pass to it row for row).
 """
 
 from __future__ import annotations

@@ -1,17 +1,13 @@
 """Pipeline registry entries: the lcmap segment / tile / prediction
 compositions, the multimodal decode operators and the curation
-pipelines.
+pipelines — compositions whose core is a pandas-UDF or ML boundary
+(UD1 detect, UD2 train, UD3 predict, multimodal decode).
 
-The notes below moved here with the queries they describe.
-
-Pipeline registry entries: compositions whose core is a pandas-UDF
-or ML boundary (UD1 detect, UD2 train, UD3 predict, multimodal decode,
-ANN). Most are rows-only — no SQL oracle exists (seeded Spark-side
-fixtures / approximate sketches), so the driver records the weaker
-rows-only check and golden tests in tests/test_pipelines.py pin
-correctness. Exceptions: ``kmv_sketch`` and ``llm_ann_topk`` are
-deterministic functions of the driver tables and carry full generated
-oracles.
+The lcmap entries run over md5-hash fixtures DuckDB regenerates, so
+each carries a full oracle; the /segment and /prediction entries run
+the request path's plans (``plans/``).
+An entry without one records the driver's weaker rows-only check, and
+golden tests in tests/test_pipelines.py pin its correctness.
 
 All inputs are deterministic (seeded synthetic fixtures or the
 provided tables), so row counts and schemas are stable across runs.
@@ -28,19 +24,33 @@ from .dedup import _sql_sem_parts
 from .text import _mix_plan, _sql_mix
 
 
-def q_lcmap_segment_detect(spark, sf_dir):
-    """UD1: raster → time-series assembly → per-pixel detection →
-    38-col segments (plans/segment.py). Fully oracle-checked: the
-    input chip is the md5-hash fixture (synth_ard_hash) and the
-    detector is closed-form integer-sum OLS, so DuckDB regenerates
-    the identical raster in SQL and reproduces the fitted slope /
-    intercept / RMSE bit-for-bit (_sql_segment_detect)."""
+def _detect_chip(spark, side: int):
+    """UD1 over one md5-hash chip (synth_ard_hash) of ``side``²
+    pixels: assembly → per-pixel detect → 38-col segments
+    (plans/segment.py).  The detector is closed-form integer-sum OLS,
+    so DuckDB regenerates the raster and reproduces slope / intercept
+    / RMSE bit-for-bit (_sql_segment_detect(side))."""
     from ..plans.segment import segment_pipeline
     from ..sources.fixtures import synth_ard_hash
-    ard = synth_ard_hash(spark, side=10)
-    return segment_pipeline(ard, side=10).select(
+    ard = synth_ard_hash(spark, side=side)
+    return segment_pipeline(ard, side=side).select(
         "cx", "cy", "px", "py", "sday", "eday", "curqa",
         F.col("recoef")[0].alias("reslope"), "reint", "rermse")
+
+
+def q_lcmap_segment_detect(spark, sf_dir):
+    """/segment at probe scale (a 10×10-pixel chip)."""
+    return _detect_chip(spark, side=10)
+
+
+def q_lcmap_detect_chip(spark, sf_dir):
+    """BENCH-SCALE /segment: one FULL 100×100-pixel chip — the
+    reference's unit of work (blackmagic/blueprints/segment.py:253-264
+    runs detection chip-at-a-time).  This is the engine's published
+    number for the reference's detect path; BASELINE.md's only anchor
+    (~970 s/chip, prediction.py:203-207) is the companion prediction
+    path benched by ``lcmap_predict_chip``."""
+    return _detect_chip(spark, side=100)
 
 
 def _sql_segment_detect(side: int = 10, n_acq: int = 40) -> str:
@@ -102,73 +112,41 @@ FROM fit3
 """
 
 
-def q_lcmap_prediction(spark, sf_dir):
-    """UD2+UD3: train (fallback classifier) then batch-predict with
-    defaults routing — the full /prediction composition at probe
-    scale (side=8; the bench-scale twin is ``lcmap_predict_chip``).
-    FULLY ORACLE-CHECKED since round 11: the md5-hash fixtures
-    regenerate in SQL and the compared columns (keys, segment dates,
-    exploded prediction dates, prob arity) are closed-form
-    (_sql_predict_chip(side=8)); the tile_pipeline fit — including
-    its seeded sample/split, which only shape the MODEL, never the
-    compared columns — still runs as the workload."""
+def _predict_chip(spark, side: int, target_samples: int,
+                  class_min: int, class_max: int):
+    """UD2+UD3: /tile's fit then /prediction's one-pass scoring
+    (plans/tile.tile_pipeline, plans/prediction.prediction_pipeline)
+    over one md5-hash fixture chip, projected to the columns
+    _sql_predict_chip(side) regenerates: keys, segment and prediction
+    dates, and the prob arity (NUM_CLASSES; 0 for default segments).
+    The model shapes only the probabilities, which are not compared."""
     from ..plans.prediction import prediction_pipeline
     from ..plans.tile import tile_pipeline
     from ..sources.fixtures import synth_aux_hash, synth_segments_hash
-    segs = synth_segments_hash(spark, side=8)
-    aux = synth_aux_hash(spark, side=8)
-    model, _ = tile_pipeline(segs, aux, "2001-07-01", target_samples=200,
-                             class_min=5, class_max=40)
+    segs = synth_segments_hash(spark, side=side)
+    aux = synth_aux_hash(spark, side=side)
+    model = tile_pipeline(segs, aux, "2001-07-01",
+                          target_samples=target_samples,
+                          class_min=class_min, class_max=class_max)
     preds = prediction_pipeline(segs, aux, model, 7, 1)
     return preds.select("cx", "cy", "px", "py", "sday", "eday", "pday",
                         F.size("prob").alias("n_probs"))
 
 
-def q_lcmap_detect_chip(spark, sf_dir):
-    """BENCH-SCALE /segment: one FULL 100×100-pixel chip — the
-    reference's unit of work (blackmagic/blueprints/segment.py:253-264
-    runs detection chip-at-a-time) — through the same assembly →
-    per-pixel detect → 38-col projection as ``lcmap_segment_detect``.
-    Fully oracle-checked at this scale too: the md5-hash chip and the
-    closed-form integer-sum OLS detector regenerate bit-for-bit in
-    DuckDB (_sql_segment_detect(side=100)).  This is the engine's
-    published number for the reference's detect path; BASELINE.md's
-    only anchor (~970 s/chip, prediction.py:203-207) is the companion
-    prediction path benched by ``lcmap_predict_chip``."""
-    from ..plans.segment import segment_pipeline
-    from ..sources.fixtures import synth_ard_hash
-    ard = synth_ard_hash(spark, side=100)
-    return segment_pipeline(ard, side=100).select(
-        "cx", "cy", "px", "py", "sday", "eday", "curqa",
-        F.col("recoef")[0].alias("reslope"), "reint", "rermse")
+def q_lcmap_prediction(spark, sf_dir):
+    """Train-then-predict at probe scale (side=8); the bench-scale
+    twin is ``lcmap_predict_chip``."""
+    return _predict_chip(spark, 8, 200, 5, 40)
 
 
-def _train_chip(segs, aux):
-    """The training prelude both bench-scale chip queries share:
-    assembly → md5-ordered stratified sample → hash holdout split →
-    fit.  Returns ``(data, train, test, model)``."""
-    from ..ml.train import train_model
-    from ..operators.sampling import (stratified_sample,
-                                      train_test_split_hash)
-    from ..plans.training import training_data
-    # localCheckpoint: FOUR downstream consumers share the assembled
-    # matrix (stats, the sample, the fit's collect, the split counts) —
-    # without it Catalyst re-runs the segments⨝aux assembly per
-    # consumer.  ~20k rows × 69 features: sample-sized, not tile-sized.
-    # Lazy (r15): the sampler's label-count collect is the first
-    # action and materializes it; the fit and the returned stats/split
-    # aggregates then read blocks.
-    ordc = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit("ord"), F.col("px").cast("string"),
-        F.col("py").cast("string"))), 1, 12), 16, 10).cast("bigint")
-    data = (training_data(segs, aux, "2001-07-01", keep_keys=True)
-            .withColumn("__ord", ordc).localCheckpoint(eager=False))
-    sample = stratified_sample(data, "label", 20_000, 50, 4_000,
-                               order_col="__ord")
-    train, test = train_test_split_hash(sample, ["px", "py"], 0.2)
-    model = train_model(train.select("label", "features"),
-                        test.select("label", "features"))  # UD2: the fit
-    return data, train, test, model
+def q_lcmap_predict_chip(spark, sf_dir):
+    """BENCH-SCALE /prediction: train-then-predict over one FULL
+    100×100 chip — the exact workload behind BASELINE.md's only
+    published number (~970 s/chip for the superseded per-row loop,
+    blackmagic/blueprints/prediction.py:203-207; the batch path this
+    engine implements is prediction.py:331-345).  Broadcast model +
+    Arrow-batched iterator-UDF inference."""
+    return _predict_chip(spark, 100, 20_000, 50, 4_000)
 
 
 def q_lcmap_tile_train(spark, sf_dir):
@@ -185,15 +163,31 @@ def q_lcmap_tile_train(spark, sf_dir):
     SQL), sampling orders by an md5 column (the stratified_sample
     order_col determinism contract) and the holdout coin is
     train_test_split_hash, so every count in the output is a closed
-    -form function DuckDB reproduces (_sql_tile_train)."""
+    -form function DuckDB reproduces (_sql_tile_train) — which
+    tile_pipeline's ``rand``-ordered sample and ``randomSplit`` are not."""
+    from ..ml.train import train_model
+    from ..operators.sampling import (stratified_sample,
+                                      train_test_split_hash)
     from ..operators.stats import label_statistics
+    from ..plans.training import training_data
     from ..sources.fixtures import synth_aux_hash, synth_segments_hash
     segs = synth_segments_hash(spark, side=100)
     aux = synth_aux_hash(spark, side=100)
-    # tile_pipeline's stages, shared instead of recomputed: assembly →
-    # stats → sample → split → fit (plans/tile.py:tile_pipeline
-    # verbatim; inlined so the summary below reuses the same frames)
-    data, train, test, _ = _train_chip(segs, aux)
+    # localCheckpoint: FOUR consumers share the assembled matrix
+    # (stats, the sample, the fit's collect, the split counts), ~20k
+    # rows × 69 features.  Not lazy under AQE: the call runs the aux
+    # dedup shuffle and the broadcast; the sampler's label-count
+    # collect materializes the rest.
+    ordc = F.conv(F.substring(F.md5(F.concat_ws(
+        ":", F.lit("ord"), F.col("px").cast("string"),
+        F.col("py").cast("string"))), 1, 12), 16, 10).cast("bigint")
+    data = (training_data(segs, aux, "2001-07-01", keep_keys=True)
+            .withColumn("__ord", ordc).localCheckpoint(eager=False))
+    sample = stratified_sample(data, "label", 20_000, 50, 4_000,
+                               order_col="__ord")
+    train, test = train_test_split_hash(sample, ["px", "py"], 0.2)
+    train_model(train.select("label", "features"),
+                test.select("label", "features"))  # UD2: the fit
     stats = label_statistics(data, "label")
     splits = (train.agg(F.lit("train").alias("split"),
                         F.count(F.lit(1)).alias("n"))
@@ -204,64 +198,6 @@ def q_lcmap_tile_train(spark, sf_dir):
                          .alias("split"),
                          F.col("cnt").alias("n"))
             .unionByName(splits).orderBy("split"))
-
-
-def q_lcmap_predict_chip(spark, sf_dir):
-    """BENCH-SCALE /prediction: train-then-predict over one FULL
-    100×100 chip — the exact workload behind BASELINE.md's only
-    published number (~970 s/chip for the superseded per-row loop,
-    blackmagic/blueprints/prediction.py:203-207; the batch path this
-    engine implements is prediction.py:331-345).  Broadcast model +
-    Arrow-batched iterator-UDF inference; defaults routed around the
-    model exactly as ``lcmap_prediction`` does at probe scale.
-
-    FULLY ORACLE-CHECKED (round 11): md5-hash fixtures + the
-    deterministic sample/split; the compared columns (keys, segment
-    dates, exploded prediction dates, and the prob-vector arity —
-    NUM_CLASSES for modeled rows, 0 for default segments) are
-    closed-form in DuckDB (_sql_predict_chip).  The fit and the
-    Arrow UDF inference still RUN — their probabilities are the
-    ML boundary the oracle deliberately does not hash."""
-    from ..sources.fixtures import synth_aux_hash, synth_segments_hash
-    # localCheckpoint the fixture frames: BOTH the training assembly
-    # and prediction_inputs below consume segs+aux, and each
-    # checkpoint materialization re-ran the md5 fixture generation.
-    # ALL FOUR checkpoints here are LAZY since r15: this query's only
-    # unavoidable driver actions are the fit's matrix collect and the
-    # final inference job, and every checkpoint's first consumer sits
-    # under one of them — the fit's collect materializes segs, aux
-    # and data in ONE job; the final job materializes inputs.  The
-    # r14 eager forms ran four extra blocking jobs for the same reuse
-    # (driver bench 13.3 s, scaling ratio 0.74 — action-bound).
-    segs = synth_segments_hash(spark, side=100) \
-        .localCheckpoint(eager=False)
-    aux = synth_aux_hash(spark, side=100).localCheckpoint(eager=False)
-    # tile_pipeline's fit stages with the training matrix checkpointed
-    # once (sample + the fit's collect re-ran the assembly)
-    *_, model = _train_chip(segs, aux)
-    # The reference's defaults/data split and union, inlined instead
-    # of prediction_pipeline (the tile_train precedent), for two
-    # reasons of this query's own.  Its inputs are checkpointed: segs
-    # and aux also feed the fit, and the assembled inputs are staged
-    # once, so both union branches read staged rows and the md5
-    # fixture generation and feature build run once.  And the Arrow
-    # side is coalesced to 8 partitions: 8 Python tasks over staged
-    # rows, the shape that stayed flat under full-bench load (r12's
-    # 5.9→14 s swing; SCALE.md r13).  prediction_pipeline, the request
-    # path, has neither a second consumer nor that load: it scores in
-    # one pass, spread over defaultParallelism partitions.
-    from ..ml.predict import predict_probabilities
-    from ..operators.unions import default_predictions, group_data
-    from ..plans.prediction import prediction_inputs
-    inputs = prediction_inputs(segs, aux, 7, 1) \
-        .localCheckpoint(eager=False)
-    defaults, data = group_data(inputs)
-    predicted = (predict_probabilities(data.coalesce(8), model,
-                                       "independent")
-                 .drop("independent"))
-    preds = default_predictions(defaults.drop("independent"), predicted)
-    return preds.select("cx", "cy", "px", "py", "sday", "eday", "pday",
-                        F.size("prob").alias("n_probs"))
 
 
 def _h8sql(key: str) -> str:
@@ -352,7 +288,7 @@ def _sql_predict_chip(side: int = 100, cx: int = -2061585,
     segment [Mar y0, Feb y1] contains July 1 of exactly the years
     y0..y1-1; a default segment yields one sentinel row), with the
     prob-vector arity — NUM_CLASSES for modeled rows, 0 for defaults
-    (operators/unions.default_predictions)."""
+    (plans/prediction.prediction_pipeline)."""
     from ..schemas import NUM_CLASSES
     return f"""
 WITH {_sql_hash_fixtures(side)},

@@ -134,19 +134,14 @@ def test_training_data_last_wins_dedupe(spark):
 
 @pytest.fixture(scope="module")
 def model(segments, aux):
-    model_bytes, stats = tile_pipeline(
-        segments, aux, "2001-07-01",
-        target_samples=200, class_min=5, class_max=40, seed=42)
-    return model_bytes
+    return tile_pipeline(segments, aux, "2001-07-01",
+                         target_samples=200, class_min=5, class_max=40)
 
 
 @pytest.fixture(scope="module")
 def spark_ml_model(segments, aux):
-    model_bytes, _ = tile_pipeline(
-        segments, aux, "2001-07-01",
-        target_samples=200, class_min=5, class_max=40, seed=42,
-        trainer="spark_ml")
-    return model_bytes
+    return train_model(training_data(segments, aux, "2001-07-01"),
+                       trainer="spark_ml")
 
 
 def test_tile_pipeline_trains(model):
@@ -169,9 +164,10 @@ def test_prediction_inputs_explode(segments, aux):
 def test_tile_predict_spark_ml_e2e(segments, aux, spark_ml_model):
     """The distributed trainer branch (pyspark.ml multinomial logistic
     regression — no driver-side matrix) through the SAME model-bytes +
-    9-prob contract: tile fit → broadcast → mapInPandas predict, with
-    the reference's watchlist metric (mlogloss, tile.py:303-310)
-    asserted against the uniform-prior baseline ln(9)."""
+    9-prob contract: training-matrix fit → broadcast → mapInPandas
+    predict, with the reference's watchlist metric (mlogloss,
+    tile.py:303-310) asserted against the uniform-prior baseline
+    ln(9)."""
     import math
     import pickle
 

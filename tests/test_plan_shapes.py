@@ -69,6 +69,18 @@ def test_stratified_sample_caps_are_literals(q):
     assert "Window" in plan
 
 
+def test_predict_chip_scores_in_one_pass(q, spark):
+    # the registry's bench-scale /prediction runs prediction_pipeline:
+    # no defaults/data union, no coalesce cap on the Arrow side, and
+    # the scoring input spread on the pixel over one partition per core
+    plan = simple_plan(q("lcmap_predict_chip"))
+    assert "Union" not in plan
+    assert "Coalesce 8" not in plan
+    n = spark.sparkContext.defaultParallelism
+    assert re.search(rf"hashpartitioning\(px#\d+L?, py#\d+L?, {n}\)",
+                     plan), plan
+
+
 def test_stratified_sample_hash_no_window_no_fact_shuffle(q):
     # the at-scale hash-Bernoulli mode: thresholds broadcast, keep
     # decision is a map-side filter — no window, no per-class sort

@@ -6,6 +6,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from lcmap_blackmagic_spark.operators import sampling
 from lcmap_blackmagic_spark.operators.sampling import (
     stratified_sample, stratified_sample_approx)
 
@@ -44,8 +45,8 @@ def test_approx_rows_are_subset_and_deterministic(spark, sf_dir):
     assert k1 <= base
 
 
-def test_skew_switch_is_automatic(spark, sf_dir):
-    """Past exact_class_limit the sampler must plan sampleBy (no
+def test_skew_switch_is_automatic(spark, sf_dir, monkeypatch):
+    """Past EXACT_CLASS_ROWS_LIMIT the sampler must plan sampleBy (no
     window); under it, the exact windowed mode; with order_col the
     switch is disabled because determinism was demanded."""
     df = _labels(spark, sf_dir)
@@ -53,16 +54,16 @@ def test_skew_switch_is_automatic(spark, sf_dir):
     def plan(sampled):
         return sampled._jdf.queryExecution().executedPlan().toString()
 
-    tiny = stratified_sample(df, "label", 300, 20, 150,
-                             exact_class_limit=10)
+    monkeypatch.setattr(sampling, "EXACT_CLASS_ROWS_LIMIT", 10)
+    tiny = stratified_sample(df, "label", 300, 20, 150)
     assert "Window" not in plan(tiny)          # approx: Bernoulli sample
     assert "Filter UDF" in plan(tiny)          # sampleBy's per-label filter
 
-    big = stratified_sample(df, "label", 300, 20, 150,
-                            exact_class_limit=10**9)
+    monkeypatch.setattr(sampling, "EXACT_CLASS_ROWS_LIMIT", 10**9)
+    big = stratified_sample(df, "label", 300, 20, 150)
     assert "Window" in plan(big)               # exact windowed mode
 
+    monkeypatch.setattr(sampling, "EXACT_CLASS_ROWS_LIMIT", 10)
     pinned = stratified_sample(df, "label", 300, 20, 150,
-                               order_col="l_orderkey",
-                               exact_class_limit=10)
+                               order_col="l_orderkey")
     assert "Window" in plan(pinned)            # determinism wins
